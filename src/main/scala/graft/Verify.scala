@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,44 +9,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // shuffle/checkpoint blocks on tmpfs: this VM's disk stalls
-    // stochastically for tens of seconds under shuffle-file churn
-    // (measured 2026-08: same query 3 s alone vs 100 s mid-session);
-    // a real cluster would use local SSDs — tmpfs is the local[] stand-in
-    val localDir = sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", localDir)
-      // streaming state checkpoints default to /tmp (disk) — the same
-      // stochastic-stall device; keep them on the tmpfs scratch too
-      .config("spark.sql.streaming.checkpointLocation", s"$localDir/stream-ck-${ProcessHandle.current.pid}")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bound listener-state retention: with hundreds of executions in
-      // one session the retained plan graphs + metrics age the driver
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // clear checkpoints a previous JVM left behind (memory-sink queries
-    // cannot recover a checkpoint — a stale dir fails the query)
-    def rmStreamCk(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmStreamCk))
-      f.delete(): Unit
-    }
-    // sweep checkpoint dirs left by DEAD JVMs only — per-pid names keep
-    // live concurrent runs (verify + profile side by side) from
-    // clobbering each other's streaming state
-    Option(new java.io.File(localDir).listFiles()).foreach(_
-      .filter(f => f.getName.startsWith("stream-ck-") &&
-        !f.getName.stripPrefix("stream-ck-").toLongOption
-          .exists(pid => ProcessHandle.of(pid).isPresent()))
-      .foreach(rmStreamCk))
+    val spark = Session.build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -1,22 +1,26 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
+import graft.Bench
 
 /** Headline bench subset with guard rails (round-7 verdict item 4):
   * the full 251-entry driver pass (~540 s) is noise-dominated on this
   * host class — a stochastic storage stall can blanket any one query
   * (round 7's in-pass x18 read 3.6× its fresh-JVM number), so the
-  * per-round signal needs a SMALL pinned set measured under the
-  * BenchGuard discipline: min-of-2 samples, a THIRD sample only when
-  * the min-of-2 breaches the limit (a genuine plan regression fails
-  * all three; a host stall doesn't). Limits derive from the round-7
-  * fresh-JVM bands (judge re-measured movers: x18 12.1 s, x16 4.6,
-  * x04 6.8, g09 0.86) at ~1.3-1.5×, so a breach means a plan change,
-  * not weather.
+  * per-round signal needs a SMALL pinned set with limits. It is the
+  * registry bench's run loop ([[graft.Bench.measure]]) over `guards`
+  * with their limits attached: min-of-2 samples, a THIRD sample when
+  * the two disagree by >1.3× or the min-of-2 breaches the limit (a
+  * genuine plan regression fails all three; a host stall doesn't).
+  * Limits derive from the round-7 fresh-JVM bands (judge re-measured
+  * movers: x18 12.1 s, x16 4.6, x04 6.8, g09 0.86) at ~1.3-1.5×, so a
+  * breach means a plan change, not weather. A guard that fails counts
+  * as a breach.
   *
-  * Emits ONE JSON line to stdout and `bench_headline.json`:
+  * Emits ONE JSON line to stdout, and to `bench_headline.json` with
+  * the limits, samples and `_failed` list appended:
   * {"metric":"headline","value":Σmin,"unit":"sec",
-  *  "queries":{...},"breaches":[...],"sf":...}
+  *  "queries":{...},"breaches":[...],"ingest_control":s,
+  *  "scan_control":s,"sf":...}
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *   sbt "runMain graft.bench.Headline"
@@ -78,93 +82,38 @@ object Headline {
     // the overhead IS the replay-safety, not a regression
     ("s29_stream_bm25_increment", 12.0))
 
+  /** The guards whose min is at or over their limit, or that failed,
+    * in `guards` order. */
+  def breaches(run: Bench.Run): Seq[String] = {
+    val times = run.times.toMap
+    guards.collect { case (n, limit)
+      if run.failed.contains(n) || times.get(n).exists(_ >= limit) => n }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val localDir = sys.env.getOrElse("SPARK_LOCAL_DIRS",
-      "/dev/shm/graft-spark")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.streaming.checkpointLocation",
-        s"$localDir/stream-ck-${ProcessHandle.current.pid}")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warmup
-    try {
-      graft.sources.GraphStore.nodesAttrs(spark, sfDir)
-      graft.sources.GraphStore.edges(spark, sfDir)
-    } catch { case _: Throwable => () }
-    // HOST-WEATHER GAUGE: the ingest/scan macro harness is fixed work
-    // whose normal-band cost is documented (~1.6 s ingest) — a breach
-    // below is auto-adjudicated against it (ingest >> normal means the
-    // host band blanketed all three samples; re-run on a normal band
-    // before treating any breach as a plan regression)
-    val (ingestControl, scanControl) =
-      try graft.bench.IngestScan.run(spark)
-      catch { case _: Throwable => (-1.0, -1.0) }
-
-    val runLog =
-      scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val breaches = scala.collection.mutable.ListBuffer.empty[String]
-    val results = guards.map { case (name, limit) =>
-      val fn = graft.SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        val s = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        org.apache.spark.sql.GraftInternals.stopStateStores()
-        rmrf(new java.io.File(
-          s"$localDir/stream-ck-${ProcessHandle.current.pid}"))
-        System.gc()
-        s
-      }
-      // the abeb9ec discipline: min-of-2; a THIRD sample only when the
-      // min-of-2 already breaches — one stall can blanket two samples,
-      // a plan regression survives all three
-      val two = Seq(once(), once())
-      val runs = if (two.min < limit) two else two :+ once()
-      runLog(name) = runs.map(v => math.rint(v * 1000) / 1000)
-      if (runs.min >= limit) breaches += name
-      name -> runs.min
-    }
+    val spark = graft.Session.build()
+    Bench.warmUp(spark, sfDir)
+    // HOST-WEATHER GAUGE: a breach below is auto-adjudicated against
+    // the control's normal band (~1.6 s ingest) — ingest >> normal
+    // means the host band blanketed all three samples; re-run on a
+    // normal band before treating any breach as a plan regression
+    val controls = Bench.control(spark)
+    val run = Bench.measure(spark, sfDir,
+      guards.map { case (n, _) => n -> graft.SparkEntry.queries(n) },
+      guards.toMap)
     spark.stop()
-    def f3(v: Double) = "%.3f".format(v)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val lims = guards.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val samples = runLog.map { case (k, vs) =>
-      "\"" + k + "\":" + vs.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val br = breaches.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val (ingest, scan) = controls.fold(("null", "null")) { case (i, s) =>
+      (Bench.f3(i), Bench.f3(s)) }
+    val br = breaches(run).map("\"" + _ + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"headline","value":${
-      f3(results.map(_._2).sum)},"unit":"sec","queries":$qs,""" +
-      s""""breaches":$br,"ingest_control":${f3(ingestControl)},""" +
-      s""""scan_control":${f3(scanControl)},"sf":"$sfDir"}"""
-    try {
-      val w = new java.io.PrintWriter("bench_headline.json")
-      try w.println(line.stripSuffix("}") +
-        s""","limits":$lims,"samples":$samples}""")
-      finally w.close()
-    } catch { case _: Throwable => () }
+      Bench.f3(run.times.map(_._2).sum)},"unit":"sec","queries":${
+      Bench.obj(run.times)},""" +
+      s""""breaches":$br,"ingest_control":$ingest,""" +
+      s""""scan_control":$scan,"sf":"$sfDir"}"""
+    Bench.writeJson("bench_headline.json", line, run,
+      s""","limits":${Bench.obj(guards)}""")
     println(line)
-  }
-
-  private def rmrf(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmrf))
-    f.delete(): Unit
   }
 }

@@ -1,108 +1,134 @@
 package graft.bench
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftInternals
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Generic cost-structure profiler for any registry entry: runs each
-  * named query twice (cold, then warm) with a listener counting the
-  * Spark jobs, stages, tasks, cumulative task runtime and shuffle bytes
-  * the query launches. For the iterative x-family the question the
-  * optimization guide asks first — is the wall time data or
-  * driver-side job choreography? — is answered by comparing
-  * `task_s` (executor work) against `wall_s` (what the bench pays):
-  * a 20 s query with 3 s of task time across 90 jobs is scheduling,
-  * not data.
+import graft.{Bench, Session}
+
+/** The cost-structure profiler for any registry entry: runs each named
+  * entry cold, then warm, the way the bench times it (same session,
+  * set-up, noop sink and hygiene), with one SparkListener and one
+  * StreamingQueryListener. Per run it prints:
+  *
+  *   - the totals: wall time, Spark jobs, stages, tasks, cumulative
+  *     task runtime and shuffle bytes. Is the wall time data or
+  *     driver-side job choreography? Compare `task_s` (executor work)
+  *     against `wall_s` (what the bench pays): a 20 s query with 3 s
+  *     of task time across 90 jobs is scheduling, not data;
+  *   - the top stages by task time (a 3-task stage with 8 task_s is a
+  *     serialized barrier);
+  *   - when jobs carry the `graft.truss.round` local property (set in
+  *     [[graft.graphx.GraphAnalytics.trussPeel]]), the jobs, stages,
+  *     tasks and shuffle bytes per peel round;
+  *   - when streams ran, each micro-batch's duration accounting from
+  *     QueryProgressEvent, and the gap between the summed trigger time
+  *     and the wall (the start/stop/setup floor).
   *
   *   sbt "runMain graft.bench.QueryProfile <sfDir> <name1> <name2> ..."
   */
 object QueryProfile {
+  private final case class Stage(round: String, id: Int, name: String,
+      tasks: Int, taskMs: Long, shufW: Long, shufR: Long)
+  private final case class Batch(query: String, durations: Map[String, Long],
+      rows: Long)
+
+  /** Everything the listeners saw since the last `reset`. */
+  private final class Recorder extends SparkListener {
+    val jobs = mutable.LinkedHashMap.empty[String, Int] // round → jobs
+    val stages = mutable.ArrayBuffer.empty[Stage]
+    val batches = mutable.ArrayBuffer.empty[Batch]
+    private val stageRound = mutable.Map.empty[Int, String]
+
+    def reset(): Unit = synchronized {
+      jobs.clear(); stages.clear(); batches.clear(); stageRound.clear()
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val r = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("graft.truss.round")))
+        .getOrElse("setup")
+      jobs(r) = jobs.getOrElse(r, 0) + 1
+      e.stageIds.foreach(stageRound(_) = r)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        val i = e.stageInfo
+        val m = Option(i.taskMetrics)
+        stages += Stage(stageRound.getOrElse(i.stageId, "setup"), i.stageId,
+          i.name.take(80), i.numTasks, m.fold(0L)(_.executorRunTime),
+          m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
+          m.fold(0L)(_.shuffleReadMetrics.totalBytesRead))
+      }
+    val streams: StreamingQueryListener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit =
+        Recorder.this.synchronized {
+          batches += Batch(e.progress.name, e.progress.durationMs.asScala
+            .map { case (k, v) => k -> v.longValue() }.toMap,
+            e.progress.numInputRows)
+        }
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val localDir = sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.streaming.checkpointLocation",
-        s"$localDir/stream-ck-${ProcessHandle.current.pid}")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .getOrCreate()
+    val spark = Session.build()
     spark.sparkContext.setLogLevel("ERROR")
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val taskMs = new AtomicLong(0L)
-    val shufW = new AtomicLong(0L)
-    val shufR = new AtomicLong(0L)
-    // optional per-stage detail (SPARK_GRAFT_STAGES=1): the
-    // AQE-coalescing hunt needs (tasks, task_s) per stage, not totals —
-    // a 3-task stage with 8 task_s is a serialized barrier
-    val stageDetail = sys.env.get("SPARK_GRAFT_STAGES").contains("1")
-    val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Int, String, Int, Long, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(e.stageInfo.numTasks)
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          taskMs.addAndGet(m.executorRunTime)
-          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          if (stageDetail) stageRows.add((e.stageInfo.stageId,
-            e.stageInfo.name.take(80), e.stageInfo.numTasks,
-            m.executorRunTime, m.shuffleWriteMetrics.bytesWritten))
-        }
-      }
-    })
-    def reset(): Unit = {
-      jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
-      shufW.set(0); shufR.set(0); stageRows.clear()
-    }
-    def clean(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      org.apache.spark.sql.GraftInternals.stopStateStores()
-      def rmrf(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmrf))
-        f.delete(): Unit
-      }
-      rmrf(new java.io.File(s"$localDir/stream-ck-${ProcessHandle.current.pid}"))
-      System.gc()
-    }
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    println(f"${"query"}%-28s ${"run"}%-5s ${"wall_s"}%7s ${"jobs"}%5s " +
-      f"${"stages"}%7s ${"tasks"}%6s ${"task_s"}%7s ${"shufW_MB"}%9s ${"shufR_MB"}%9s")
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
+    spark.streams.addListener(rec.streams)
+    Bench.warmUp(spark, sfDir)
+    def mb(bytes: Long) = bytes / 1e6
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
       Seq("cold", "warm").foreach { run =>
-        Thread.sleep(500); reset()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(1000) // listener bus drain
-        println(f"$n%-28s $run%-5s $wall%7.2f ${jobs.get}%5d " +
-          f"${stages.get}%7d ${tasks.get}%6d ${taskMs.get / 1e3}%7.1f " +
-          f"${shufW.get / 1e6}%9.1f ${shufR.get / 1e6}%9.1f")
-        if (stageDetail && run == "warm") {
-          import scala.jdk.CollectionConverters._
-          stageRows.asScala.toSeq.sortBy(-_._4).take(12).foreach {
-            case (sid, name, nt, ms, w) =>
-              println(f"    s$sid%-5d $nt%4d tasks ${ms / 1e3}%7.1f task_s " +
-                f"${w / 1e6}%7.1f MB  $name")
+        GraftInternals.flushListenerBus(spark.sparkContext)
+        rec.reset()
+        val wall = Bench.time(spark, sfDir, fn)
+        GraftInternals.flushListenerBus(spark.sparkContext)
+        rec.synchronized {
+          val ss = rec.stages
+          println(f"${"query"}%-28s ${"run"}%-5s ${"wall_s"}%7s ${"jobs"}%5s " +
+            f"${"stages"}%7s ${"tasks"}%6s ${"task_s"}%7s ${"shufW_MB"}%9s ${"shufR_MB"}%9s")
+          println(f"$n%-28s $run%-5s $wall%7.2f ${rec.jobs.values.sum}%5d " +
+            f"${ss.size}%7d ${ss.map(_.tasks).sum}%6d " +
+            f"${ss.map(_.taskMs).sum / 1e3}%7.1f " +
+            f"${mb(ss.map(_.shufW).sum)}%9.1f ${mb(ss.map(_.shufR).sum)}%9.1f")
+          println("  top stages by task time:")
+          ss.sortBy(-_.taskMs).take(12).foreach { s =>
+            println(f"    [${s.round}%-5s] s${s.id}%-5d ${s.tasks}%4d tasks " +
+              f"${s.taskMs / 1e3}%7.1f task_s ${mb(s.shufW)}%7.1f MB  ${s.name}")
+          }
+          if (rec.jobs.keySet.exists(_ != "setup")) {
+            println(f"  ${"round"}%-8s ${"jobs"}%5s ${"stages"}%7s " +
+              f"${"tasks"}%6s ${"shufW_MB"}%9s ${"shufR_MB"}%9s")
+            rec.jobs.keys.toSeq.sortBy(_.toIntOption.getOrElse(0)).foreach { r =>
+              val rs = ss.filter(_.round == r)
+              println(f"  $r%-8s ${rec.jobs(r)}%5d ${rs.size}%7d " +
+                f"${rs.map(_.tasks).sum}%6d ${mb(rs.map(_.shufW).sum)}%9.1f " +
+                f"${mb(rs.map(_.shufR).sum)}%9.1f")
+            }
+          }
+          if (rec.batches.nonEmpty) {
+            val trig = rec.batches.map(_.durations.getOrElse("triggerExecution", 0L)).sum / 1e3
+            println(f"  batches=${rec.batches.size}%d triggerSum=$trig%5.2f s " +
+              f"gap=${wall - trig}%5.2f s")
+            rec.batches.zipWithIndex.foreach { case (b, i) =>
+              val keys = Seq("triggerExecution", "queryPlanning", "getBatch",
+                "latestOffset", "addBatch", "walCommit", "commitOffsets")
+              println(s"    batch$i (${b.query}, ${b.rows} rows): " +
+                keys.map(k => s"$k=${b.durations.getOrElse(k, 0L)}").mkString(" "))
+            }
           }
         }
-        clean()
       }
     }
     spark.stop()

@@ -902,7 +902,7 @@ object GraphAnalytics {
     var exhausted = false
     for (r <- 1 to rounds if !exhausted) {
       // round marker: jobs launched inside round r carry this local
-      // property, so a listener (bench.TrussProfile) can attribute
+      // property, so a listener (bench.QueryProfile) can attribute
       // jobs/stages/shuffle bytes to rounds — the x18 cost breakdown
       sc0.setLocalProperty("graft.truss.round", r.toString)
       val removed = st.where(col("sup") < k - 2).select(col("ek").as("re"))

@@ -381,7 +381,7 @@ object AsOfJoin {
     * row at once — `values` maps right column → output alias. */
   def asOfLE(left: DataFrame, right: DataFrame, on: Seq[String],
       ord: Seq[String], values: Seq[(String, String)]): DataFrame =
-    org.apache.spark.sql.graftbridge.Bridge.ofRows(left.sparkSession,
+    org.apache.spark.sql.GraftInternals.ofRows(left.sparkSession,
       buildPlan(left.queryExecution.analyzed,
         right.queryExecution.analyzed, on, ord, values))
 

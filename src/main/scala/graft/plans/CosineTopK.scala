@@ -212,7 +212,7 @@ object CosineTopK {
       col(vecCol).cast(ArrayType(DoubleType)))
     val p = probes.select(col(probeIdCol).cast("long"),
       col(probeVecCol).cast(ArrayType(DoubleType)))
-    org.apache.spark.sql.graftbridge.Bridge.ofRows(corpus.sparkSession,
+    org.apache.spark.sql.GraftInternals.ofRows(corpus.sparkSession,
       CosineTopKPlan(k, excludeSelf, outputAttrs,
         c.queryExecution.analyzed, p.queryExecution.analyzed))
   }

@@ -231,7 +231,7 @@ object Sessionize {
     * gap value fails the job with an actionable error. */
   def assign(df: DataFrame, key: Seq[String], ord: Seq[String],
       gapCol: String, gapThreshold: Long, as: String): DataFrame =
-    org.apache.spark.sql.graftbridge.Bridge.ofRows(df.sparkSession,
+    org.apache.spark.sql.GraftInternals.ofRows(df.sparkSession,
       buildPlan(df.queryExecution.analyzed, key, ord, gapCol,
         gapThreshold, as))
 

@@ -2108,7 +2108,7 @@ object GraphXQueries {
     * self-join. Shared by x04 and x05. */
   private def coPurchasePairs(s: org.apache.spark.sql.SparkSession,
                               d: String): org.apache.spark.sql.DataFrame =
-    // Both exchanges pinned (r10): TrussProfile showed AQE coalescing
+    // Both exchanges pinned (r10): QueryProfile showed AQE coalescing
     // the groupBy and the distinct to 3-4 tasks (it sizes by BYTES —
     // the per-order set build + in-row pair fanout and the pair dedup
     // are per-row CPU over small rows), serializing ~2.6 s/task on the

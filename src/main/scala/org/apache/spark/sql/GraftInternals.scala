@@ -1,15 +1,23 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge to the sql-private Column↔Expression converters (they are
-  * `private[sql]` in Scala signature only — stable public bytecode).
-  * Confined to this one file so the rest of the engine stays on public
-  * API.
+/** The one bridge into Spark's sql-private API (the Column↔Expression
+  * converters and `classic.Dataset.ofRows` are `private[sql]` in Scala
+  * signature only — stable public bytecode). Confined to this one file
+  * so the rest of the engine stays on public API.
   */
 object GraftInternals {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Turns graft's custom logical nodes (plans/AsOfJoin, Sessionize,
+    * CosineTopK) into DataFrames — the standard door for libraries
+    * that add whole operators; reflection would trade this
+    * compile-time check for a runtime one. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Register a native-expression builder into the LIVE session's
     * function registry (temp function) — the runtime-plugin seam

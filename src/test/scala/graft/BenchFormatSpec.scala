@@ -65,4 +65,15 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(line.length <= 120)
     assert(line.contains("\"_rest\":"))
   }
+
+  test("a filtered run never writes a committed artifact") {
+    // (SPARK_GRAFT_FORCE_DIST, SPARK_GRAFT_ONLY set) -> file written
+    for (((forceDist, filtered), file) <- Seq(
+        (false, false) -> "bench_out.json",
+        (true, false) -> "bench_dist.json",
+        (false, true) -> "bench_only.json",
+        (true, true) -> "bench_only.json"))
+      assert(Bench.outName(forceDist, filtered) == file,
+        s"forceDist=$forceDist filtered=$filtered")
+  }
 }
