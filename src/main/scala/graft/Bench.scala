@@ -25,21 +25,17 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.build()
     // forced-distributed mode (VERDICT r09 item 3): the sf0.1 graphs
-    // all sit below the 1 M-edge local-arm thresholds, so the
-    // DISTRIBUTED fixpoint arms — the actual 100 TB path — are
-    // invisible to the regular bench. SPARK_GRAFT_FORCE_DIST=1 zeroes
-    // every localEdgeThreshold conf so x01/x18/x24-x34 run their
-    // distributed loops; the run writes bench_dist.json (committed per
-    // round) instead of bench_out.json so distributed-arm drift is
-    // tracked round-over-round. Results are identical either way (the
-    // arms-equality specs pin it); only the execution path changes.
+    // all sit below the local-arm limits, so the DISTRIBUTED fixpoint
+    // arms — the actual 100 TB path — are invisible to the regular
+    // bench. SPARK_GRAFT_FORCE_DIST=1 sets the one local-arm limit to
+    // 0 so every fixpoint runs its distributed loop; the run writes
+    // bench_dist.json (committed per round) instead of bench_out.json
+    // so distributed-arm drift is tracked round-over-round. Results are
+    // identical either way (the arms-equality specs pin it); only the
+    // execution path changes.
     val forceDist = sys.env.get("SPARK_GRAFT_FORCE_DIST")
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    if (forceDist)
-      Seq("cc", "cycle", "bfs", "scc", "mis", "coloring", "hits",
-          "matching", "louvain", "ppr", "sssp", "bc", "pr")
-        .foreach(a =>
-          spark.conf.set(s"spark.graft.$a.localEdgeThreshold", "0"))
+    if (forceDist) spark.conf.set(graft.graphx.Arms.LimitConf, "0")
     // optional name filter for standalone profiling / drift bisection:
     // SPARK_GRAFT_ONLY=x01_connected_components,p14_ann_ivf
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -198,10 +194,12 @@ object Bench {
     * 2,000-char tail capture minus sbt's trailer line with margin. */
   def compactLine(entries: Seq[(String, Double)], sfDir: String,
                   budget: Int = 1800): String = {
-    val head =
-      s"""{"metric":"total","value":${f3(entries.map(_._2).sum)},"unit":"sec","queries":{"""
+    val total = f3(entries.map(_._2).sum)
+    val head = s"""{"metric":"total","value":$total,"unit":"sec","queries":{"""
     val tail = s"""},"sf":"$sfDir"}"""
-    val restReserve = ",\"_rest\":99999.999".length
+    // _rest sums a subset of the entries, so it renders no wider than
+    // the total
+    val restReserve = ",\"_rest\":".length + total.length
     val sorted = entries.sortBy { case (n, v) => (-v, n) }
     val sb = new StringBuilder(head)
     var used = head.length + tail.length + restReserve

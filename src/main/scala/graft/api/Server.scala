@@ -208,7 +208,7 @@ object Server {
         ("policy/traversal", "point_path_max_frontier",
           graft.graph.Traversal.PointPathMaxFrontier.toString),
         ("policy/analytics", "cc_local_edge_threshold",
-          conf.get("spark.graft.cc.localEdgeThreshold", "1000000")),
+          graft.graphx.Arms.limit(engine.spark, 1000000L).toString),
         ("policy/ingest", "lineage_cut_every_loads", "8"),
         ("policy/ingest", "max_files_per_trigger", "10"),
         ("policy/session", "shuffle_partitions",

@@ -76,21 +76,10 @@ object GraphAnalytics {
       .select(col("src"), col("dst"), col("od"))
       .unionAll(verts.select(col("vid"), col("vid"), lit(0L)))
       .transform(graft.Ckpt.cut)
-    // adaptive dispatch, the CC-loop pattern: a 20-round synchronous
-    // fixpoint is 40+ sequential shuffle stages whose scheduling
-    // overhead dwarfs the arithmetic while the graph fits the driver —
-    // at or under `spark.graft.pr.localEdgeThreshold` ec rows (edges +
-    // one self-edge per vertex; default 1M ≈ tens of MB of longs) the
-    // identical integer recurrence runs as a driver array loop
-    // (milliseconds); above it the distributed join+agg loop runs,
-    // checkpointed every 5 rounds. Both arms are
-    // the same exact integer math — equality pinned in GraphXSpec —
-    // and the count rides the just-checkpointed ec partitions.
-    val threshold = edges.sparkSession.conf
-      .get("spark.graft.pr.localEdgeThreshold", "1000000").toLong
-    val local = ec.count() <= threshold
-    edges.sparkSession.sparkContext.setLocalProperty("graft.pr.impl",
-      if (local) "local" else "distributed")
+    // rows = ec (edges + one self-edge per vertex; 1M ≈ tens of MB of
+    // longs); the count rides the just-checkpointed ec partitions. The
+    // distributed loop checkpoints every 5 rounds.
+    val local = Arms.local(edges.sparkSession, "pr", ec.count(), 1000000L)
     val ranks = if (local) localPageRank(ec, iters)
       else distributedPageRank(ec, verts, iters)
     ranks.join(verts, ranks("v") === verts("vid"))
@@ -167,10 +156,9 @@ object GraphAnalytics {
     * authority mass dst→src, 'z' self rows keep contribution-free
     * vertices present at zero — the x02 self-edge trick), so a round is
     * one equi-join + one hash aggregate + one O(1) max reduce, the same
-    * shape as the PageRank loop and dispatched the same way (driver
-    * array at or under `spark.graft.hits.localEdgeThreshold` tagged
-    * rows, distributed join+agg loop above; arms equality-pinned in
-    * GraphXSpec, choice observable in `graft.hits.impl`).
+    * shape as the PageRank loop and dispatched through [[Arms]] on the
+    * tagged row count (driver array or distributed join+agg loop;
+    * arms equality-pinned in GraphXSpec).
     * Returns [id, hub_micro, auth_micro]; true score = micro / 1e6 of
     * the per-round max. */
   def hits(edges: DataFrame, iters: Int = 10): DataFrame = {
@@ -186,11 +174,7 @@ object GraphAnalytics {
       .unionAll(e.select(col("dst"), col("src"), lit("h")))
       .unionAll(verts.select(col("vid"), col("vid"), lit("z")))
       .transform(graft.Ckpt.cut)
-    val threshold = edges.sparkSession.conf
-      .get("spark.graft.hits.localEdgeThreshold", "1000000").toLong
-    val local = ced.count() <= threshold
-    edges.sparkSession.sparkContext.setLocalProperty("graft.hits.impl",
-      if (local) "local" else "distributed")
+    val local = Arms.local(edges.sparkSession, "hits", ced.count(), 1000000L)
     val hs = if (local) localHits(ced, iters)
       else distributedHits(ced, verts, iters)
     hs.join(verts, hs("v") === verts("vid"))
@@ -265,9 +249,8 @@ object GraphAnalytics {
     * whole fixpoint against a DuckDB recursive CTE (x02's mirror with a
     * seed-conditional restart term). Off-ball vertices stay at exactly
     * 0 and never acquire mass: at scale the touched set is the seeds'
-    * forward ball, not the graph. Same adaptive dispatch as [[pageRank]]
-    * (`spark.graft.ppr.localEdgeThreshold`, choice in `graft.ppr.impl`,
-    * arms equality-pinned in GraphXSpec).
+    * forward ball, not the graph. Same [[Arms]] dispatch as [[pageRank]]
+    * (arms equality-pinned in GraphXSpec).
     * Returns [id, rank_micro] for TOUCHED vertices only (rank > 0) —
     * the distributed loop carries just the positive frontier, so state
     * is ball-sized, not graph-sized; true score = rank_micro / 1e6. */
@@ -288,11 +271,7 @@ object GraphAnalytics {
       .select(col("src"), col("dst"), col("od"))
       .unionAll(verts.select(col("vid"), col("vid"), lit(0L)))
       .transform(graft.Ckpt.cut)
-    val threshold = edges.sparkSession.conf
-      .get("spark.graft.ppr.localEdgeThreshold", "1000000").toLong
-    val local = ec.count() <= threshold
-    edges.sparkSession.sparkContext.setLocalProperty("graft.ppr.impl",
-      if (local) "local" else "distributed")
+    val local = Arms.local(edges.sparkSession, "ppr", ec.count(), 1000000L)
     val ranks = if (local) localPpr(ec, seedVids, iters)
       else distributedPpr(ec, verts, seedVids, iters)
     ranks.join(verts, ranks("v") === verts("vid"))
@@ -390,25 +369,17 @@ object GraphAnalytics {
       .select("id", "landmark", "dist")
   }
 
-  /** Landmark shortest paths with scale dispatch — the CC-style seam:
-    * at or below `spark.graft.sp.pregelEdgeThreshold` edges (default
-    * 100k) the GraphX Pregel program runs (lower constant factors on
-    * small graphs — one tight RDD loop, no per-hop planning); above it
-    * the DataFrame BFS loop is chosen, so THE SCALE PATH IS THE DEFAULT
-    * AT SCALE (no per-vertex hash maps serialized around, AQE replans
-    * every hop, same loop shape as traversal/CC). The two are proven
-    * output-identical in GraphXSpec. The edge count rides the count the
-    * caller's plan needs anyway and the choice lands in the
-    * `graft.sp.impl` local property so tests pin the dispatch. */
-  def shortestPathsAuto(edges: DataFrame, landmarks: Seq[String]): DataFrame = {
-    val spark = edges.sparkSession
-    val threshold = spark.conf
-      .get("spark.graft.sp.pregelEdgeThreshold", "100000").toLong
-    val impl = if (edges.count() <= threshold) "pregel" else "df"
-    spark.sparkContext.setLocalProperty("graft.sp.impl", impl)
-    if (impl == "pregel") shortestPaths(edges, landmarks)
+  /** Landmark shortest paths with [[Arms]] dispatch on the edge count
+    * (default 100k): the small arm is the GraphX Pregel program (lower
+    * constant factors on small graphs — one tight RDD loop, no per-hop
+    * planning), tagged `pregel`; the scale arm is the DataFrame BFS
+    * loop, tagged `df` (no per-vertex hash maps serialized around, AQE
+    * replans every hop, same loop shape as traversal/CC). The two are
+    * proven output-identical in GraphXSpec. */
+  def shortestPathsAuto(edges: DataFrame, landmarks: Seq[String]): DataFrame =
+    if (Arms.local(edges.sparkSession, "sp", edges.count(), 100000L,
+        labels = ("pregel", "df"))) shortestPaths(edges, landmarks)
     else shortestPathsDF(edges, landmarks)
-  }
 
   /** Multi-landmark directed hop counts as plain DataFrame joins — the
     * scale path for [[shortestPaths]] (identical output; equality
@@ -469,19 +440,9 @@ object GraphAnalytics {
                             rounds: Int): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // adaptive dispatch, the pageRank/CC pattern: N synchronous rounds
-    // are 2N+ sequential shuffle stages whose scheduling overhead
-    // dwarfs the arithmetic while the graph fits the driver; at or
-    // under the threshold the identical round-synchronous relaxation
-    // runs as a driver array loop (the count rides the caller's
-    // checkpointed pair list). Both arms share the exact integer
-    // min-plus recurrence — equality pinned in GraphXSpec.
-    val threshold = spark.conf
-      .get("spark.graft.sssp.localEdgeThreshold", "2000000").toLong
-    val local = pairs.count() <= threshold
-    spark.sparkContext.setLocalProperty("graft.sssp.impl",
-      if (local) "local" else "distributed")
-    if (local) {
+    // the count rides the caller's checkpointed pair list; both arms
+    // share the exact integer min-plus recurrence
+    if (Arms.local(spark, "sssp", pairs.count(), 2000000L)) {
       val es = pairs.select(col("p1"), col("p2"), col("w"))
         .as[(Long, Long, Long)].collect()
       val dist = scala.collection.mutable.HashMap(source -> 0L)
@@ -549,26 +510,14 @@ object GraphAnalytics {
     * vertices with positive dependency. */
   def boundedBetweenness(pairs: DataFrame, sources: Seq[Long],
                          depth: Int): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    // adaptive dispatch (the pageRank/CC pattern): the sweep is
-    // ~2·depth synchronous rounds of joins — pure scheduling overhead
-    // while the graph fits the driver. Under the threshold the
-    // identical σ/δ integer recurrences run as driver hash-map loops;
-    // above it the distributed layer sweep below is the scale path.
-    // Equality of the two arms is pinned in GraphXSpec.
-    val threshold = spark.conf
-      .get("spark.graft.bc.localEdgeThreshold", "2000000").toLong
-    val local = pairs.count() <= threshold
-    spark.sparkContext.setLocalProperty("graft.bc.impl",
-      if (local) "local" else "distributed")
-    if (local) return localBoundedBetweenness(pairs, sources, depth)
-    distBoundedBetweenness(pairs, sources, depth)
+    if (Arms.local(pairs.sparkSession, "bc", pairs.count(), 2000000L))
+      localBoundedBetweenness(pairs, sources, depth)
+    else distBoundedBetweenness(pairs, sources, depth)
   }
 
   /** Driver-side arm of [[boundedBetweenness]]: the same layered
     * forward-σ / backward-δ integer recurrences over collected pairs.
-    * depth·(V+E) work per source — microseconds under the threshold. */
+    * depth·(V+E) work per source — microseconds under the local limit. */
   private def localBoundedBetweenness(pairs: DataFrame, sources: Seq[Long],
                                       depth: Int): DataFrame = {
     val spark = pairs.sparkSession
@@ -1078,21 +1027,17 @@ object GraphAnalytics {
       .distinct().transform(graft.Ckpt.cut)
 
     // Direct local finish (r9): when the WHOLE graph fits the local
-    // threshold, skip the leaf-peel frame machinery (~8 choreography
+    // limit, skip the leaf-peel frame machinery (~8 choreography
     // jobs) and union-find the collected edge list outright — the
     // union rule (smaller root wins) makes every root its component's
     // min member, which is exactly the relabel contract. Leaf peeling
     // remains the at-scale move: it is what keeps the post-peel core
     // under the bounded collect when the graph itself is far over the
-    // threshold (ScaleRehearsalSpec pins that design at 10x).
-    val directThreshold = und.sparkSession.conf
-      .get("spark.graft.cc.localEdgeThreshold", "1000000").toLong
-    if (und.count() / 2 <= directThreshold) {
-      und.sparkSession.sparkContext
-        .setLocalProperty("graft.cc.impl", "local")
+    // limit (ScaleRehearsalSpec pins that design at 10x). und carries
+    // both directions, so rows/2 = undirected edge count.
+    if (Arms.local(und.sparkSession, "cc", und.count() / 2, 1000000L))
       return localUnionFind(und)
         .select(col("id"), col("comp").as("component"))
-    }
 
     // Leaf peeling: degree-1 vertices can't change anyone else's
     // component — strip them, run the iterative part on the (much
@@ -1136,23 +1081,18 @@ object GraphAnalytics {
 
   /** Core-CC dispatcher: after leaf-peeling the remaining core is often
     * tiny relative to the graph (92% of vertices here are degree-1), so
-    * below `spark.graft.cc.localEdgeThreshold` undirected edges
-    * (default 1M ≈ tens of MB of ids on the driver) we finish with an
-    * exact driver-side union-find — the same bounded-collect-with-
-    * distributed-fallback shape as Traversal's point-path frontier. Above
-    * the bound the pointer-jump loop runs entirely as shuffles. */
+    * under the [[Arms]] limit (1M undirected edges ≈ tens of MB of ids
+    * on the driver) we finish with an exact driver-side union-find —
+    * the same bounded-collect-with-distributed-fallback shape as
+    * Traversal's point-path frontier. Above it the pointer-jump loop
+    * runs entirely as shuffles. */
   private def ccLoop(und0: DataFrame): DataFrame = {
     val und = und0.transform(graft.Ckpt.cut)
-    val threshold = und.sparkSession.conf
-      .get("spark.graft.cc.localEdgeThreshold", "1000000").toLong
     // und carries both directions, so rows/2 = undirected edge count;
     // the count is a cheap scan of the just-checkpointed partitions
-    val local = und.count() / 2 <= threshold
-    // observability for the scale-rehearsal pins (ScaleRehearsalSpec):
-    // which arm ran, and how many rounds the distributed loop took
-    und.sparkSession.sparkContext.setLocalProperty("graft.cc.impl",
-      if (local) "local" else "distributed")
-    if (local) localUnionFind(und) else distributedCcLoop(und)
+    if (Arms.local(und.sparkSession, "cc", und.count() / 2, 1000000L))
+      localUnionFind(und)
+    else distributedCcLoop(und)
   }
 
   /** Exact union-find over a collected edge list; comp = min member id
@@ -1164,8 +1104,16 @@ object GraphAnalytics {
     // self-edge vertices stay registered); each edge appears exactly once
     val pairs = und.where(col("u") <= col("v"))
       .select("u", "v").as[(String, String)].collect()
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
+    spark.createDataset(unionFind(pairs)).toDF("id", "comp")
+  }
+
+  /** Path-compressed union-find on the driver in which the smaller
+    * root wins every union, so every endpoint of `pairs` maps to the
+    * min member of its component. Returns (vertex, root) per vertex. */
+  private def unionFind[T](pairs: Array[(T, T)])(
+      implicit ord: Ordering[T]): Seq[(T, T)] = {
+    val parent = scala.collection.mutable.HashMap.empty[T, T]
+    def find(x: T): T = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent(r)
       var c = x // path compression
@@ -1174,11 +1122,10 @@ object GraphAnalytics {
     }
     pairs.foreach { case (a, b) =>
       val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     val verts = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-    spark.createDataset(verts.iterator.map(v => (v, find(v))).toSeq)
-      .toDF("id", "comp")
+    verts.iterator.map(v => (v, find(v))).toSeq
   }
 
   /** Iterative min-label propagation with pointer-jump compression over
@@ -1434,18 +1381,11 @@ object GraphAnalytics {
     * f^(2^jumpPow)(v), a vertex on v's cycle. */
   def cycleLabel(succ0: DataFrame, jumpPow: Int, windowPow: Int): DataFrame = {
     val succ = succ0.select(col("v"), col("p")).transform(graft.Ckpt.cut)
-    // adaptive dispatch (the MIS-loop pattern): the doubling rounds
-    // are jumpPow + windowPow sequential self-join checkpoints; under
-    // the local threshold the same doubling recurrence runs on driver
-    // arrays (identical arithmetic — pure pointer composition and
-    // window minima), one collect instead of ~2·pow jobs
+    // the local arm runs the same doubling recurrence on driver maps
+    // (pure pointer composition and window minima), one collect
+    // instead of ~2·pow self-join checkpoints
     val spark0 = succ.sparkSession
-    val cycThreshold = spark0.conf
-      .get("spark.graft.cycle.localEdgeThreshold", "1000000").toLong
-    val cycLocal = succ.count() <= cycThreshold
-    spark0.sparkContext.setLocalProperty("graft.cycle.impl",
-      if (cycLocal) "local" else "distributed")
-    if (cycLocal) {
+    if (Arms.local(spark0, "cycle", succ.count(), 1000000L)) {
       import spark0.implicits._
       val sc = succ.as[(Long, Long)].collect()
       val next = sc.toMap
@@ -1533,15 +1473,9 @@ object GraphAnalytics {
     val spark = und0.sparkSession
     import spark.implicits._
     val und = und0.select(col("u"), col("v")).transform(graft.Ckpt.cut)
-    // adaptive dispatch (the MIS-loop pattern): O(ecc) frontier rounds
-    // of 3-exchange jobs collapse to one driver BFS under the local
-    // threshold — identical (v, dist) set by BFS uniqueness
-    val bfsThreshold = spark.conf
-      .get("spark.graft.bfs.localEdgeThreshold", "1000000").toLong
-    val bfsLocal = und.count() <= bfsThreshold
-    spark.sparkContext.setLocalProperty("graft.bfs.impl",
-      if (bfsLocal) "local" else "distributed")
-    if (bfsLocal) {
+    // O(ecc) frontier rounds of 3-exchange jobs collapse to one driver
+    // BFS — identical (v, dist) set by BFS uniqueness
+    if (Arms.local(spark, "bfs", und.count(), 1000000L)) {
       val adj = und.as[(Long, Long)].collect()
         .groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
       val dist = scala.collection.mutable.HashMap(root -> 0L)
@@ -1599,11 +1533,10 @@ object GraphAnalytics {
     * vertex id (shuffle-partitioned, no broadcast of unbounded sets);
     * the live subgraph shrinks monotonically; per-iteration
     * `Ckpt.cut` keeps lineage flat (reliable under
-    * spark.graft.checkpointDir like the other loops). Under
-    * `spark.graft.scc.localEdgeThreshold` (default 1M edges ≈ tens of
-    * MB of ids) an exact driver-side iterative Tarjan finishes the
-    * job — the CC dispatcher discipline; arms equality-pinned in
-    * GraphXSpec. */
+    * spark.graft.checkpointDir like the other loops). Under the
+    * [[Arms]] limit (1M edges ≈ tens of MB of ids) an exact
+    * driver-side iterative Tarjan finishes the job; arms
+    * equality-pinned in GraphXSpec. */
   def stronglyConnectedComponents(edges0: DataFrame,
       maxRounds: Int = 100): DataFrame = {
     val edges = edges0
@@ -1611,13 +1544,9 @@ object GraphAnalytics {
         col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct().transform(graft.Ckpt.cut)
-    val spark = edges.sparkSession
-    val threshold = spark.conf
-      .get("spark.graft.scc.localEdgeThreshold", "1000000").toLong
-    val local = edges.count() <= threshold
-    spark.sparkContext.setLocalProperty("graft.scc.impl",
-      if (local) "local" else "distributed")
-    if (local) localTarjan(edges) else distributedScc(edges, maxRounds)
+    if (Arms.local(edges.sparkSession, "scc", edges.count(), 1000000L))
+      localTarjan(edges)
+    else distributedScc(edges, maxRounds)
   }
 
   /** Iterative (explicit-stack) Tarjan over collected edges; relabels
@@ -1716,7 +1645,7 @@ object GraphAnalytics {
       round += 1
       if (round > maxRounds) throw new IllegalStateException(
         s"SCC peel exceeded $maxRounds rounds ($nVerts vertices live); " +
-          "raise maxRounds or spark.graft.scc.localEdgeThreshold")
+          s"raise maxRounds or ${Arms.LimitConf}")
       // trim to fixpoint: no in-edge or no out-edge → singleton SCC
       var trimming = true
       while (trimming && nVerts > 0) {
@@ -1791,17 +1720,10 @@ object GraphAnalytics {
     val sym = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
       .distinct()
     var liveEdges = sym.transform(graft.Ckpt.cut)
-    // adaptive dispatch (the CC/PageRank/Louvain-loop pattern): the
-    // peel is ~5 tiny exchanges per round and rounds serialize on
-    // id-ascending chains, so under the local threshold the identical
-    // round recurrence runs as a driver sweep — same winners, same
-    // round tags, same rounds metric (MisSpec + arms test pin it)
-    val misThreshold = spark.conf
-      .get("spark.graft.mis.localEdgeThreshold", "1000000").toLong
-    val misLocal = liveEdges.count() <= misThreshold
-    spark.sparkContext.setLocalProperty("graft.mis.impl",
-      if (misLocal) "local" else "distributed")
-    if (misLocal) {
+    // the peel is ~5 tiny exchanges per round and rounds serialize on
+    // id-ascending chains; the driver sweep keeps the same winners,
+    // round tags and rounds metric (MisSpec + arms test pin it)
+    if (Arms.local(spark, "mis", liveEdges.count(), 1000000L)) {
       import spark.implicits._
       val adj = liveEdges.as[(Long, Long)].collect()
         .groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
@@ -1890,16 +1812,11 @@ object GraphAnalytics {
     val dep = sym.where(col("v") < col("u"))
       .select(col("u").as("v"), col("v").as("s"))
       .transform(graft.Ckpt.cut)
-    // adaptive dispatch (the MIS/Louvain-loop pattern): same
-    // Jones–Plassmann recurrence as a driver sweep under the local
-    // threshold — same colors, same round count (a vertex colors in
-    // round 1 + max(round of smaller neighbours))
-    val colThreshold = spark.conf
-      .get("spark.graft.coloring.localEdgeThreshold", "1000000").toLong
-    val colLocal = dep.count() * 2 <= colThreshold
-    spark.sparkContext.setLocalProperty("graft.coloring.impl",
-      if (colLocal) "local" else "distributed")
-    if (colLocal) {
+    // the driver sweep runs the same Jones–Plassmann recurrence — same
+    // colors, same round count (a vertex colors in round 1 + max(round
+    // of smaller neighbours)); dep holds one direction, so rows·2 =
+    // symmetric edge count
+    if (Arms.local(spark, "coloring", dep.count() * 2, 1000000L)) {
       import spark.implicits._
       val deps = dep.as[(Long, Long)].collect()
         .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
@@ -1996,16 +1913,10 @@ object GraphAnalytics {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("mround",
           org.apache.spark.sql.types.IntegerType, nullable = false))))
-    // adaptive dispatch (the MIS-loop pattern): identical min-pointer
-    // handshake rounds as a driver sweep under the local threshold —
-    // same pairs, same round tags, same rounds metric
-    val matThreshold = spark.conf
-      .get("spark.graft.matching.localEdgeThreshold", "1000000").toLong
+    // the driver sweep runs the identical min-pointer handshake rounds
+    // — same pairs, same round tags, same rounds metric
     val matNE = liveEdges.count()
-    val matLocal = matNE <= matThreshold
-    spark.sparkContext.setLocalProperty("graft.matching.impl",
-      if (matLocal) "local" else "distributed")
-    if (matLocal) {
+    if (Arms.local(spark, "matching", matNE, 1000000L)) {
       import spark.implicits._
       val adj = liveEdges.as[(Long, Long)].collect()
         .groupBy(_._1).map { case (u, es) =>
@@ -2144,39 +2055,17 @@ object GraphAnalytics {
         // per component, so |pairs| ≤ #components); any CONSISTENT
         // representative works — labels never reach the output. The
         // pseudo-forest is tiny relative to the graph (halving per
-        // round), so below the CC local threshold the union-find runs
+        // round), so under CC's 1M default the union-find runs
         // directly on the driver from the already-checkpointed picked
         // rows — the full connectedComponents call spent ~6
         // choreography jobs per round on leaf-peel frames just to
-        // reach the same collect. Above the threshold the distributed
-        // CC path still runs.
-        val ccThreshold = spark.conf
-          .get("spark.graft.cc.localEdgeThreshold", "1000000").toLong
-        val cc = if (picked.count() <= ccThreshold) {
+        // reach the same collect. Above it the distributed CC path
+        // still runs.
+        val cc = if (Arms.local(spark, "msf", picked.count(), 1000000L)) {
           import spark.implicits._
           val prs = picked.select(col("cu"), col("cv"))
             .as[(Long, Long)].collect()
-          val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent(r)
-            var cx = x // path compression
-            while (parent.getOrElse(cx, cx) != cx) {
-              val n = parent(cx); parent(cx) = r; cx = n
-            }
-            r
-          }
-          prs.foreach { case (a, b) =>
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) {
-              if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            }
-          }
-          val verts = prs.iterator
-            .flatMap(p => Iterator(p._1, p._2)).toSet
-          broadcast(spark.createDataset(
-              verts.iterator.map(x => (x, find(x))).toSeq)
-            .toDF("oldc", "newc"))
+          broadcast(spark.createDataset(unionFind(prs)).toDF("oldc", "newc"))
         } else connectedComponents(picked.select(
             col("cu").cast("string").as("src_id"),
             col("cv").cast("string").as("dst_id")))
@@ -2370,21 +2259,12 @@ object GraphAnalytics {
       cut.sparkSession.createDataFrame(cut.rdd, cut.schema)
     }
     val sym = sym0.transform(graft.Ckpt.cut)
-    // adaptive dispatch, the CC/PageRank-loop pattern: each
-    // synchronous round is ~8 exchanges (and under AQE each exchange
-    // is its own scheduled job), so while the level's graph fits the
-    // driver the identical integer recurrence runs as a driver map
-    // loop — at sf0.1 the distributed x34 fixpoints spent ~500
-    // single-stage jobs moving <1 MB. Above the threshold the
-    // distributed join+window loop below runs; both arms are the same
-    // exact integer math (LouvainSpec pins them against an independent
-    // simulator and against each other).
-    val threshold = spark.conf
-      .get("spark.graft.louvain.localEdgeThreshold", "1000000").toLong
-    val localOk = sym.count() <= threshold
-    spark.sparkContext.setLocalProperty("graft.louvain.impl",
-      if (localOk) "local" else "distributed")
-    if (localOk) {
+    // each synchronous round is ~8 exchanges (and under AQE each
+    // exchange is its own scheduled job) — at sf0.1 the distributed
+    // x34 fixpoints spent ~500 single-stage jobs moving <1 MB.
+    // LouvainSpec pins both arms against an independent simulator and
+    // against each other.
+    if (Arms.local(spark, "louvain", sym.count(), 1000000L)) {
       import spark.implicits._
       val edges = sym.select(col("u"), col("v"), col("w"))
         .as[(Long, Long, Long)].collect()
@@ -2571,19 +2451,16 @@ object GraphAnalytics {
       .select(col("v0"), col("v0").as("comm")))
     val twoM = sym.agg(coalesce(sum("w"), lit(0L))).first().getLong(0)
 
-    // adaptive dispatch for the WHOLE outer loop: levels only shrink,
-    // so a level-0 graph under the local threshold keeps every later
-    // level under it too — the full multi-level recursion (fixpoints,
+    // dispatch for the WHOLE outer loop: levels only shrink, so a
+    // level-0 graph under the local limit keeps every later level
+    // under it too — the full multi-level recursion (fixpoints,
     // exact-integer Q convergence, contraction, mapping composition)
     // runs as one driver pass over collected edges, identical math to
     // the DataFrame loop below (same recurrence the x34 oracle
     // replays). At sf0.1 the distributed outer loop was ~500
     // scheduled single-stage jobs moving <1 MB of data.
-    val lvThreshold = spark.conf
-      .get("spark.graft.louvain.localEdgeThreshold", "1000000").toLong
-    if (sym.count() <= lvThreshold) {
+    if (Arms.local(spark, "louvain", sym.count(), 1000000L)) {
       import spark.implicits._
-      spark.sparkContext.setLocalProperty("graft.louvain.impl", "local")
       var edges = sym.select(col("u"), col("v"), col("w"))
         .as[(Long, Long, Long)].collect()
       var selfs = Map.empty[Long, Long]

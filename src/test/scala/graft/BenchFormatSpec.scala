@@ -29,6 +29,11 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(line.length <= 1800, s"compact line is ${line.length} bytes")
     assert(line.startsWith("{\"metric\":\"total\",\"value\":"))
     assert(line.endsWith("\"}"))
+    // the same registry scaled past 10^5 s in total: a _rest rollup
+    // wider than 99999.999 must still fit the budget
+    val huge = Bench.compactLine(entries.map { case (k, v) => k -> v * 1e5 },
+      "/data/testdata/sf0.1")
+    assert(huge.length <= 1800, s"compact line is ${huge.length} bytes")
   }
 
   test("compact line keeps the schema, biggest entries, and a _rest rollup") {

@@ -169,6 +169,8 @@ class ServerSpec extends SparkSpec {
         l.contains("\"value\":\"10000\"")), pb)
       assert(lines.exists(l => l.contains("\"key\":\"shuffle_partitions\"")),
         pb)
+      assert(lines.exists(l => l.contains("\"id\":\"policy/analytics\"") &&
+        l.contains("\"key\":\"cc_local_edge_threshold\"")), pb)
 
       val (fc, fb) = request(s"$base/policies?iris=policy/storage", "GET")
       assert(fc == 200, fb)

@@ -75,7 +75,7 @@ class ColoringSpec extends SparkSpec {
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
       (5L, 6L), (6L, 4L), (6L, 7L), (8L, 9L)).toDF("src", "dst")
-    val key = "spark.graft.coloring.localEdgeThreshold"
+    val key = Arms.LimitConf
     val loc = GraphAnalytics.greedyColoring(e)
       .as[(Long, Int)].collect().sorted.toSeq
     val lr = rounds

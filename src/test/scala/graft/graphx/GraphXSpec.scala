@@ -33,7 +33,7 @@ class GraphXSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(spark.sparkContext.getLocalProperty("graft.pr.impl") == "local")
     try {
-      spark.conf.set("spark.graft.pr.localEdgeThreshold", "0")
+      spark.conf.set(Arms.LimitConf, "0")
       val viaDist = GraphAnalytics.pageRank(edges, iters = 20)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(spark.sparkContext.getLocalProperty("graft.pr.impl")
@@ -44,7 +44,7 @@ class GraphXSpec extends SparkSpec {
         }
         s"arms diverged on ${d.size} vertices: ${d.take(5)}"
       })
-    } finally spark.conf.unset("spark.graft.pr.localEdgeThreshold")
+    } finally spark.conf.unset(Arms.LimitConf)
   }
 
   test("connectedComponents: two disjoint chains get two components") {
@@ -103,13 +103,13 @@ class GraphXSpec extends SparkSpec {
       "p" -> "q", "q" -> "r", "r" -> "p", "z" -> "z")
     val expect = GraphAnalytics.connectedComponents(edges)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
+    spark.conf.set(Arms.LimitConf, "0")
     try {
       val got = GraphAnalytics.connectedComponents(edges)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(got == expect)
       assert(got("d") == "a" && got("r") == "p" && got("z") == "z")
-    } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+    } finally spark.conf.unset(Arms.LimitConf)
   }
 
   test("scc: known graph, both arms agree, min-member labels") {
@@ -131,14 +131,14 @@ class GraphXSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(spark.sparkContext.getLocalProperty("graft.scc.impl") == "local")
     assert(local == expect, local.toString)
-    spark.conf.set("spark.graft.scc.localEdgeThreshold", "0")
+    spark.conf.set(Arms.LimitConf, "0")
     try {
       val dist = GraphAnalytics.stronglyConnectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(spark.sparkContext
         .getLocalProperty("graft.scc.impl") == "distributed")
       assert(dist == expect, dist.toString)
-    } finally spark.conf.unset("spark.graft.scc.localEdgeThreshold")
+    } finally spark.conf.unset(Arms.LimitConf)
   }
 
   test("scc arms agree on the x25 item-transition graph (sf0.001)") {
@@ -155,7 +155,7 @@ class GraphXSpec extends SparkSpec {
       .select(col("a.p").as("src"), col("b.p").as("dst")).distinct()
     val local = GraphAnalytics.stronglyConnectedComponents(e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.scc.localEdgeThreshold", "0")
+    spark.conf.set(Arms.LimitConf, "0")
     try {
       val dist = GraphAnalytics.stronglyConnectedComponents(e)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -164,7 +164,7 @@ class GraphXSpec extends SparkSpec {
         .getLocalProperty("graft.scc.rounds").toInt
       assert(rounds >= 1 && rounds <= 20,
         s"peel rounds $rounds outside sane band")
-    } finally spark.conf.unset("spark.graft.scc.localEdgeThreshold")
+    } finally spark.conf.unset(Arms.LimitConf)
   }
 
   test("bfsDistances: path + branch + unreachable island") {
@@ -234,16 +234,16 @@ class GraphXSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
     try {
-      spark.conf.set("spark.graft.sp.pregelEdgeThreshold", "0")
+      spark.conf.set(Arms.LimitConf, "0")
       val viaDf = rows(GraphAnalytics.shortestPathsAuto(edges, lms))
       assert(spark.sparkContext.getLocalProperty("graft.sp.impl") == "df",
         "every graph is above threshold 0 — the DF loop must be chosen")
-      spark.conf.set("spark.graft.sp.pregelEdgeThreshold",
+      spark.conf.set(Arms.LimitConf,
         Long.MaxValue.toString)
       val viaPregel = rows(GraphAnalytics.shortestPathsAuto(edges, lms))
       assert(spark.sparkContext.getLocalProperty("graft.sp.impl") == "pregel")
       assert(viaDf == viaPregel, "dispatch arms diverged")
-    } finally spark.conf.unset("spark.graft.sp.pregelEdgeThreshold")
+    } finally spark.conf.unset(Arms.LimitConf)
   }
 
   test("cycleLabel: tails land on their cycle, min label per cycle") {
@@ -305,7 +305,7 @@ class GraphXSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(spark.sparkContext.getLocalProperty("graft.hits.impl") == "local")
     try {
-      spark.conf.set("spark.graft.hits.localEdgeThreshold", "0")
+      spark.conf.set(Arms.LimitConf, "0")
       val viaDist = GraphAnalytics.hits(edges, iters = 10)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(spark.sparkContext.getLocalProperty("graft.hits.impl")
@@ -316,7 +316,7 @@ class GraphXSpec extends SparkSpec {
         }
         s"arms diverged on ${d.size} vertices: ${d.take(5)}"
       })
-    } finally spark.conf.unset("spark.graft.hits.localEdgeThreshold")
+    } finally spark.conf.unset(Arms.LimitConf)
   }
 
   /** Exact co-purchase adjacency for the x07/x09 structural checks,
@@ -372,7 +372,7 @@ class GraphXSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(spark.sparkContext.getLocalProperty("graft.ppr.impl") == "local")
     try {
-      spark.conf.set("spark.graft.ppr.localEdgeThreshold", "0")
+      spark.conf.set(Arms.LimitConf, "0")
       val viaDist = GraphAnalytics.personalizedPageRank(edges, seeds, 20)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(spark.sparkContext.getLocalProperty("graft.ppr.impl")
@@ -383,7 +383,7 @@ class GraphXSpec extends SparkSpec {
         }
         s"arms diverged on ${d.size} vertices: ${d.take(5)}"
       })
-    } finally spark.conf.unset("spark.graft.ppr.localEdgeThreshold")
+    } finally spark.conf.unset(Arms.LimitConf)
   }
 
   test("x11 harmonic centrality matches an independent driver BFS") {
@@ -567,8 +567,7 @@ class GraphXSpec extends SparkSpec {
       GraphAnalytics.boundedBetweenness(pairs, Seq(1L, 6L), depth = 3))
     assert(spark.sparkContext.getLocalProperty("graft.bc.impl") == "local")
     try {
-      spark.conf.set("spark.graft.sssp.localEdgeThreshold", "0")
-      spark.conf.set("spark.graft.bc.localEdgeThreshold", "0")
+      spark.conf.set(Arms.LimitConf, "0")
       val ssspDist = mapOf(
         GraphAnalytics.weightedShortestPaths(wpairs, 1L, rounds = 4))
       assert(spark.sparkContext.getLocalProperty("graft.sssp.impl")
@@ -579,10 +578,7 @@ class GraphXSpec extends SparkSpec {
         == "distributed")
       assert(ssspDist == ssspLocal, s"$ssspDist vs $ssspLocal")
       assert(bcDist == bcLocal, s"$bcDist vs $bcLocal")
-    } finally {
-      spark.conf.unset("spark.graft.sssp.localEdgeThreshold")
-      spark.conf.unset("spark.graft.bc.localEdgeThreshold")
-    }
+    } finally spark.conf.unset(Arms.LimitConf)
   }
 
   test("trussPeel: K4's 4-truss survives, a pendant triangle peels") {
@@ -646,7 +642,7 @@ class GraphXSpec extends SparkSpec {
     spark.conf.set("spark.graft.checkpointDir", dir)
     // force the distributed pageRank arm so its per-iteration cuts hit
     // the reliable path too (the driver arm checkpoints nothing)
-    spark.conf.set("spark.graft.pr.localEdgeThreshold", "0")
+    spark.conf.set(Arms.LimitConf, "0")
     try {
       val relTruss = GraphAnalytics.trussPeel(pairs, k = 4, rounds = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
@@ -665,7 +661,7 @@ class GraphXSpec extends SparkSpec {
         s"no checkpoint files written under $dir")
     } finally {
       spark.conf.unset("spark.graft.checkpointDir")
-      spark.conf.unset("spark.graft.pr.localEdgeThreshold")
+      spark.conf.unset(Arms.LimitConf)
     }
   }
 
@@ -695,7 +691,7 @@ class GraphXSpec extends SparkSpec {
     import spark.implicits._
     val und = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L),
       (4L, 3L), (2L, 10L), (10L, 2L)).toDF("u", "v")
-    val bKey = "spark.graft.bfs.localEdgeThreshold"
+    val bKey = Arms.LimitConf
     val bLoc = GraphAnalytics.bfsDistances(und, 1L)
       .as[(Long, Long)].collect().sorted.toSeq
     spark.conf.set(bKey, "0")
@@ -707,7 +703,7 @@ class GraphXSpec extends SparkSpec {
     val succ = Seq(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 0L,
       10L -> 11L, 11L -> 12L, 12L -> 0L, 20L -> 20L)
       .toDF("v", "p")
-    val cKey = "spark.graft.cycle.localEdgeThreshold"
+    val cKey = Arms.LimitConf
     val cLoc = GraphAnalytics.cycleLabel(succ, 2, 2)
       .as[(Long, Long, Long)].collect().sorted.toSeq
     spark.conf.set(cKey, "0")
@@ -716,6 +712,47 @@ class GraphXSpec extends SparkSpec {
         .as[(Long, Long, Long)].collect().sorted.toSeq
       assert(cLoc == cDist, s"cycle arms diverged: $cLoc vs $cDist")
     } finally spark.conf.unset(cKey)
+  }
+
+  test("one conf reaches every arm: unset runs local, 0 runs distributed") {
+    // a triangle with a tail, in every input shape the entry points take
+    val strEdges = edgeDf("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d")
+    val longEdges = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L)
+      .toDF("src", "dst")
+    val pairs = longEdges.select(col("src").as("p1"), col("dst").as("p2"))
+    val und = longEdges.select(col("src").as("u"), col("dst").as("v"))
+      .unionAll(longEdges.select(col("dst").as("u"), col("src").as("v")))
+    val succ = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 3L).toDF("v", "p")
+    // tag name -> the entry point that dispatches under it
+    val sites: Seq[(String, () => Any)] = Seq(
+      "pr" -> (() => GraphAnalytics.pageRank(strEdges, iters = 2)),
+      "hits" -> (() => GraphAnalytics.hits(strEdges, iters = 2)),
+      "ppr" -> (() =>
+        GraphAnalytics.personalizedPageRank(strEdges, Seq("a"), 2)),
+      "sssp" -> (() => GraphAnalytics.weightedShortestPaths(
+        pairs.withColumn("w", lit(1L)), 1L, rounds = 2)),
+      "bc" -> (() => GraphAnalytics.boundedBetweenness(pairs, Seq(1L), 2)),
+      "cc" -> (() => GraphAnalytics.connectedComponents(strEdges)),
+      "cycle" -> (() => GraphAnalytics.cycleLabel(succ, 2, 2)),
+      "bfs" -> (() => GraphAnalytics.bfsDistances(und, 1L)),
+      "scc" -> (() => GraphAnalytics.stronglyConnectedComponents(longEdges)),
+      "mis" -> (() => GraphAnalytics.maximalIndependentSet(longEdges)),
+      "coloring" -> (() => GraphAnalytics.greedyColoring(longEdges)),
+      "matching" -> (() => GraphAnalytics.maximalMatching(longEdges)),
+      "louvain" -> (() => GraphAnalytics.louvainOneLevel(longEdges)),
+      "sp" -> (() => GraphAnalytics.shortestPathsAuto(strEdges, Seq("a"))))
+    def impls(): Map[String, String] = sites.map { case (n, run) =>
+      run()
+      n -> spark.sparkContext.getLocalProperty(s"graft.$n.impl")
+    }.toMap
+    def expect(sp: String, others: String) = sites.map { case (n, _) =>
+      n -> (if (n == "sp") sp else others) }.toMap
+    spark.conf.unset(Arms.LimitConf)
+    assert(impls() == expect("pregel", "local"))
+    try {
+      spark.conf.set(Arms.LimitConf, "0")
+      assert(impls() == expect("df", "distributed"))
+    } finally spark.conf.unset(Arms.LimitConf)
   }
 
 }

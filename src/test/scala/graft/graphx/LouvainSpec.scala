@@ -227,14 +227,13 @@ class LouvainSpec extends SparkSpec {
   }
 
   test("arms equality: local and distributed produce identical results") {
-    // the r9 dispatch (driver arrays under
-    // spark.graft.louvain.localEdgeThreshold, DataFrame loop above)
-    // must be invisible: one level, weighted level, and the full
+    // the r9 dispatch (driver arrays under the Arms limit, DataFrame
+    // loop above) must be invisible: one level, weighted level, and the full
     // hierarchy each agree bit-for-bit between arms, including the
     // rounds/levels/gains observability properties
     val edges = k4Chain(12) ++ Seq((3L, 17L), (9L, 30L))
     def one(forceDist: Boolean): (Map[Long, (Long, Long)], String) = {
-      val key = "spark.graft.louvain.localEdgeThreshold"
+      val key = Arms.LimitConf
       if (forceDist) spark.conf.set(key, "0") else spark.conf.unset(key)
       try {
         val r = GraphAnalytics.louvainOneLevel(edges.toDF("src", "dst"))
@@ -249,7 +248,7 @@ class LouvainSpec extends SparkSpec {
     assert(lr == dr, "one-level assignment diverged between arms")
     assert(lrounds == drounds, s"rounds diverged: $lrounds vs $drounds")
     def hier(forceDist: Boolean): (Map[Long, Long], String, String, String) = {
-      val key = "spark.graft.louvain.localEdgeThreshold"
+      val key = Arms.LimitConf
       if (forceDist) spark.conf.set(key, "0") else spark.conf.unset(key)
       try {
         val m = GraphAnalytics.louvainHierarchy(

@@ -69,7 +69,7 @@ class MatchingSpec extends SparkSpec {
     import spark.implicits._
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (1L, 6L), (7L, 8L), (8L, 9L)).toDF("src", "dst")
-    val key = "spark.graft.matching.localEdgeThreshold"
+    val key = Arms.LimitConf
     val loc = GraphAnalytics.maximalMatching(e)
       .as[(Long, Long, Int)].collect().sorted.toSeq
     val lr = rounds

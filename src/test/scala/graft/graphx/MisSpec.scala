@@ -76,7 +76,7 @@ class MisSpec extends SparkSpec {
   test("arms equality: local and distributed peels agree") {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
       (5L, 6L), (6L, 4L), (6L, 7L), (8L, 9L)).toDF("src", "dst")
-    val key = "spark.graft.mis.localEdgeThreshold"
+    val key = Arms.LimitConf
     val loc = GraphAnalytics.maximalIndependentSet(e)
       .as[(Long, Int)].collect().sorted.toSeq
     val lr = rounds
