@@ -24,9 +24,16 @@ import graft.model.Value
 final class Engine(val spark: SparkSession, attrs0: DataFrame,
                    edges0: Option[DataFrame] = None) {
 
-  /** Current attribute table (long form, TMD metadata columns added if
-    * the caller's frame predates them). */
-  @volatile private var attrsDf: DataFrame = Engine.withMeta(attrs0)
+  /** Last compacted generation (at first the caller's frame, TMD
+    * metadata columns added if it predates them) and the put/load frames
+    * since then. Only mutators touch these, under `lock`. */
+  private var base: DataFrame = Engine.withMeta(attrs0)
+  private var pending: Vector[DataFrame] = Vector.empty
+  private var loadSeq = 0L
+  private val lock = new Object
+  /** Current attribute table: `base` merged with `pending` on read.
+    * Readers take this snapshot without locking. */
+  @volatile private var attrsDf: DataFrame = base
   /** Pre-derived edge view; invalidated by mutation. */
   @volatile private var edgesHint: Option[DataFrame] = edges0
 
@@ -88,7 +95,16 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
   /** Ingest pre-parsed attribute rows (the N-Triples / GraphML readers'
     * output) — the `Load` half of the reference service quartet
     * (types.proto:231-239). Metadata rides along: `@lang` / `^^<type>`
-    * in value_meta, `^"key"` references in key_meta. */
+    * in value_meta, `^"key"` references in key_meta.
+    *
+    * Merge-on-read, as the reference merges fragments and compacts on a
+    * cadence (NodeAttrIndex.cs:74,115-121): a load appends its frame to
+    * `pending`, and the table reads as ONE union over `base +: pending`
+    * under one dedup aggregate — a point read's literal id predicate
+    * pushes below it into every branch. Every 8th load compacts:
+    * `base` becomes the merged table, localCheckpoint'ed, and `pending`
+    * empties. Mutators serialize on the engine's lock, so concurrent
+    * puts never lose one another's frames. */
   def load(rows: org.apache.spark.sql.Dataset[graft.ingest.AttrRow],
            ts: Long = 0L): Engine = {
     val fresh = rows.toDF()
@@ -97,19 +113,26 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
         lit(ts).as("ts"),
         col("key_meta").cast(Value.schema).as("key_meta"),
         col("value_meta").cast(Value.schema).as("value_meta"))
-    attrsDf = merge(attrsDf, fresh)
-    // sustained ingest (loadStream) would otherwise stack one
-    // union+aggregate lineage layer per micro-batch — cut it periodically
-    if (loadSeq.incrementAndGet() % 8 == 0)
-      attrsDf = attrsDf.localCheckpoint()
-    edgesHint = None // graph mutated — derive edges from attrs again
+    lock.synchronized {
+      pending :+= fresh
+      loadSeq += 1
+      if (loadSeq % 8 == 0) {
+        base = Engine.dedup(base +: pending).localCheckpoint()
+        pending = Vector.empty
+      }
+      publish()
+    }
     this
   }
 
-  private val loadSeq = new java.util.concurrent.atomic.AtomicLong()
+  /** Expose the merged table to readers; called under `lock`. */
+  private def publish(): Unit = {
+    attrsDf = if (pending.isEmpty) base else Engine.dedup(base +: pending)
+    edgesHint = None // graph mutated — derive edges from attrs again
+  }
 
   /** Continuous put: stream an N-Triples directory into the graph, one
-    * merge per micro-batch — the reference's chunked `Load` with
+    * `load` per micro-batch — the reference's chunked `Load` with
     * backpressure and a progress stream (WatService.cs:241-300;
     * `maxFilesPerTrigger` ≙ the bounded Channel(1000), attach
     * [[graft.ingest.LoadProgress]] for the 1 s ticks). AvailableNow
@@ -136,14 +159,8 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
       .trigger(trigger)
       .start()
 
-  /** Merge-on-write dedup: identical (id, key+key_meta, value+value_meta)
-    * keeps min ts. Metadata is part of the dedup key — the reference
-    * compares whole TMD pairs (NodeAttrIndex.cs:221), so `"x"@en` and
-    * `"x"@fr` are distinct attributes. */
-  def merge(a: DataFrame, b: DataFrame): DataFrame =
-    Engine.withMeta(a).unionByName(Engine.withMeta(b))
-      .groupBy("graph", "id", "key", "key_meta", "value", "value_meta")
-      .agg(min("ts").as("ts"))
+  /** Merge two attribute frames — [[Engine.dedup]] of the pair. */
+  def merge(a: DataFrame, b: DataFrame): DataFrame = Engine.dedup(Seq(a, b))
 
   /** Register the graph as SQL temp views (`graft_nodes` long-form
     * attrs, `graft_edges`) so `spark.sql("SELECT ...")` composes with
@@ -212,8 +229,11 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
   /** Delete nodes by id (reference Remove, MemoryStore.fs:18-22). */
   def remove(ids: Seq[String]): Engine = {
     import spark.implicits._
-    attrsDf = attrsDf.join(ids.toDF("id"), Seq("id"), "left_anti")
-    edgesHint = None
+    lock.synchronized {
+      base = attrsDf.join(ids.toDF("id"), Seq("id"), "left_anti")
+      pending = Vector.empty
+      publish()
+    }
     this
   }
 }
@@ -221,7 +241,9 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
 object Engine {
   /** Engine over the bucketed graph store of a testdata dir: point
     * lookups and traversal hops filter a literal id column (pushdown +
-    * bucket pruning), and id-joins co-locate on the bucket hash.
+    * bucket pruning), and id-joins co-locate on the bucket hash. The
+    * store scan is the first `base` generation, so until the first
+    * compaction reads prune through the merge into the scan.
     * Registers the `graft_nodes`/`graft_edges` SQL views so
     * `spark.sql` composes with the relational surface immediately
     * (latest forDir wins the names; call registerViews(prefix) for
@@ -252,6 +274,16 @@ object Engine {
     spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       attrsSchema)
+
+  /** Merge-on-read dedup over attribute frames: identical (id,
+    * key+key_meta, value+value_meta) keeps min ts — one union, one
+    * aggregate however many frames. Metadata is part of the dedup key —
+    * the reference compares whole TMD pairs (NodeAttrIndex.cs:221), so
+    * `"x"@en` and `"x"@fr` are distinct attributes. */
+  def dedup(frames: Seq[DataFrame]): DataFrame =
+    frames.map(withMeta).reduce(_ unionByName _)
+      .groupBy("graph", "id", "key", "key_meta", "value", "value_meta")
+      .agg(min("ts").as("ts"))
 
   /** Add NULL TMD metadata columns to a pre-metadata attribute frame so
     * old and new schemas merge byName. */

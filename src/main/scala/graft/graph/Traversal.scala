@@ -37,10 +37,12 @@ object Traversal {
       roots: DataFrame,
       label: Option[String],
       fromHop: Int,
-      toHop: Int): DataFrame =
+      toHop: Int): DataFrame = {
+    import spark.implicits._
     followEdges(spark,
       label.fold(edges)(l => edges.where(col("label") === l)),
-      roots, fromHop, toHop)
+      Right(roots), fromHop, toHop).fold(_.toDF("id", "hop"), identity)
+  }
 
   /** Frontiers up to this size run the point-lookup path: ids held on the
     * driver, each hop one scan with `src_id IN (...)` pushed to parquet.
@@ -61,27 +63,34 @@ object Traversal {
     *    exact anti-join visited set, `localCheckpoint` per hop to cut
     *    lineage. The point path hands off mid-traversal the moment a
     *    frontier outgrows the threshold.
+    *
+    * Roots are held on the driver (Left) or in a DataFrame [id] (Right).
+    * The result stays on the driver — (id, hop) pairs — when the point
+    * path runs to the end, so the caller can filter a literal id column;
+    * otherwise it is the [id, hop] frame.
     */
   def followEdges(
       spark: SparkSession,
       edges: DataFrame,
-      roots: DataFrame,
+      roots: Either[Seq[String], DataFrame],
       fromHop: Int,
-      toHop: Int): DataFrame = {
+      toHop: Int): Either[Seq[(String, Int)], DataFrame] = {
     require(toHop >= 0 && fromHop >= 0 && fromHop <= toHop,
       s"bad hop range [$fromHop,$toHop]")
+    import spark.implicits._
 
-    val rootSample = roots.select(col("id")).distinct()
-      .limit(PointPathMaxFrontier + 1).collect().map(_.getString(0))
+    val rootSample = roots.fold(_.distinct.toArray,
+      _.select(col("id")).distinct()
+        .limit(PointPathMaxFrontier + 1).collect().map(_.getString(0)))
     if (rootSample.length <= PointPathMaxFrontier) {
       spark.sparkContext.setLocalProperty("graft.traversal.impl", "point")
       followPoint(spark, edges, rootSample, fromHop, toHop)
     } else {
       spark.sparkContext.setLocalProperty("graft.traversal.impl",
         "distributed")
-      followDistributed(spark, edges,
-        roots.select(col("id")).distinct().withColumn("hop", lit(0)),
-        fromHop, toHop)
+      val rootDf = roots.fold(_.toDF("id"), _.select(col("id")))
+      Right(followDistributed(spark, edges,
+        rootDf.distinct().withColumn("hop", lit(0)), fromHop, toHop))
     }
   }
 
@@ -92,7 +101,7 @@ object Traversal {
       edges: DataFrame,
       rootIds: Array[String],
       fromHop: Int,
-      toHop: Int): DataFrame = {
+      toHop: Int): Either[Seq[(String, Int)], DataFrame] = {
     import scala.collection.mutable
     val visited = mutable.LinkedHashMap[String, Int]()
     rootIds.foreach(id => visited(id) = 0)
@@ -116,15 +125,13 @@ object Traversal {
         // and at which hop
         spark.sparkContext.setLocalProperty("graft.traversal.impl",
           s"handoff@$hop")
-        return followDistributed(spark, edges, seed, fromHop, toHop,
-          startHop = hop, startFrontier = Some(next))
+        return Right(followDistributed(spark, edges, seed, fromHop, toHop,
+          startHop = hop, startFrontier = Some(next)))
       }
       next.foreach(id => visited(id) = hop)
       frontier = next
     }
-    import spark.implicits._
-    visited.toSeq.toDF("id", "hop")
-      .where(col("hop").between(fromHop, toHop))
+    Left(visited.toSeq.filter { case (_, h) => h >= fromHop && h <= toHop })
   }
 
   /** Distributed iterative-join loop (large frontiers). `seed` is

@@ -84,18 +84,18 @@ object StepCompiler {
     * unmodified). */
   def run(spark: SparkSession, nodesAttrs: DataFrame, q: GetQuery,
           edgesHint: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
     val metaCols =
       Seq("key_meta", "value_meta").filter(nodesAttrs.columns.contains)
     val all = nodesAttrs.select(
       (Seq("id", "key", "value", "ts") ++ metaCols).map(col): _*)
 
-    var ids: DataFrame =
-      if (q.scan) all.select("id").distinct()
-      else q.ids.toDF("id").distinct()
-    // scan roots at every node ⇒ the root semi-join is the identity
-    var attrs: DataFrame =
-      if (q.scan) all else all.join(ids, Seq("id"), "left_semi")
+    // surviving ids: on the driver (Left) while they are known there —
+    // the get roots, a point-path follow — else a frame (Right)
+    var ids: Either[Seq[String], DataFrame] =
+      if (q.scan) Right(all.select("id").distinct())
+      else Left(q.ids.distinct)
+    // scan roots at every node ⇒ the root filter is the identity
+    var attrs: DataFrame = if (q.scan) all else keep(all, ids)
 
     q.steps.foreach {
       case Filter(pred) =>
@@ -118,21 +118,21 @@ object StepCompiler {
         // re-inlined at every later reference (the attrs semi-join plus
         // each subsequent skip/limit/follow step — measured 3× = 17 s on
         // a07 at sf0.1, vs 2 s for the single-pass a01)
-        ids = flagged.where(boolCol(pred, leaves)).select("id")
-          .localCheckpoint()
-        attrs = attrs.join(ids, Seq("id"), "left_semi")
+        ids = Right(flagged.where(boolCol(pred, leaves)).select("id")
+          .localCheckpoint())
+        attrs = keep(attrs, ids)
 
       case Fields(clude) =>
         attrs = attrs.where(cludeCol(clude))
-        ids = attrs.select("id").distinct()
+        ids = Right(attrs.select("id").distinct())
 
       case Skip(n) =>
-        ids = ids.orderBy("id").offset(n)
-        attrs = attrs.join(ids, Seq("id"), "left_semi")
+        ids = Right(idFrame(spark, ids).orderBy("id").offset(n))
+        attrs = keep(attrs, ids)
 
       case Limit(n) =>
-        ids = ids.orderBy("id").limit(n)
-        attrs = attrs.join(ids, Seq("id"), "left_semi")
+        ids = Right(idFrame(spark, ids).orderBy("id").limit(n))
+        attrs = keep(attrs, ids)
 
       case Follow(pred, from, to) =>
         // edges come from the FULL table: traversal loads each newly
@@ -144,10 +144,29 @@ object StepCompiler {
             .select(col("id").as("src_id"), col("key").as("label"),
               col("value.iri").as("dst_id")))
         val edges = base.where(edgeCol(pred))
-        ids = Traversal.followEdges(spark, edges, ids, from, to).select("id")
-        attrs = all.join(ids, Seq("id"), "left_semi")
+        ids = Traversal.followEdges(spark, edges, ids, from, to)
+          .fold(hops => Left(hops.map(_._1)), df => Right(df.select("id")))
+        attrs = keep(all, ids)
     }
     attrs
+  }
+
+  /** Rows of `df` whose id survives: ids on the driver filter a literal
+    * id column, which Catalyst pushes below the merge aggregate and into
+    * the store scan (pushdown + bucket pruning); ids in a frame, or too
+    * many for the IN-list bound the point path keeps, semi-join. */
+  private def keep(df: DataFrame,
+                   ids: Either[Seq[String], DataFrame]): DataFrame =
+    ids match {
+      case Left(xs) if xs.size <= Traversal.PointPathMaxFrontier =>
+        df.where(col("id").isInCollection(xs))
+      case _ => df.join(idFrame(df.sparkSession, ids), Seq("id"), "left_semi")
+    }
+
+  private def idFrame(spark: SparkSession,
+                      ids: Either[Seq[String], DataFrame]): DataFrame = {
+    import spark.implicits._
+    ids.fold(_.toDF("id"), identity)
   }
 
   private def collectLeaves(f: FilterExpr): Seq[Cmp] = f match {

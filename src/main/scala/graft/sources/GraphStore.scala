@@ -21,9 +21,11 @@ import graft.graph.GraphView
   *  - the sorted-by-id layout keeps a node's attribute rows adjacent,
   *    the same locality the reference gets from grouping fragments.
   *
-  * Materialization happens once per (session, dir) on first use —
-  * `put`-style appends would land as new bucket files, merged on read
-  * by the Engine's merge-dedup (NodeAttrIndex.cs:221 semantics).
+  * Materialization happens once per (session, dir) on first use. Puts
+  * never rewrite the store: the Engine keeps them as pending frames
+  * merged on read with this scan under one dedup aggregate
+  * (NodeAttrIndex.cs:221 semantics), and its periodic compaction
+  * checkpoints the merged table in memory.
   *
   * VERSIONED storage lives in the sibling V2 connector
   * (sources/v2: the `graft` format + GraftCatalog): the same bucketed

@@ -1,5 +1,7 @@
 package graft.api
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -96,6 +98,148 @@ class EngineSpec extends SparkSpec {
     // replaying any single batch into the merged whole changes nothing
     assert(canon(e.merge(leftFold, b)) == canon(leftFold),
       "replayed fragment changed the merged graph")
+  }
+
+  test("flat merge-on-read equals the nested merge fold across compactions") {
+    // 18 seeded loads cross two every-8th compactions (the last two stay
+    // pending) with duplicate attributes, explicit ts, metadata variants
+    // and one remove; the engine must hold exactly the left fold of
+    // merge over the same batches — the nested semantics
+    import graft.ingest.{AttrRow, ValueRow}
+    import graft.graph.Traversal
+    val rnd = new scala.util.Random(4)
+    val metas = Seq(None, Some(ValueRow.str("lang:@en")),
+      Some(ValueRow.str("lang:@fr")),
+      Some(ValueRow.nodeid("http://www.w3.org/2001/XMLSchema#string")))
+    def row(): AttrRow = {
+      val id = s"n/${rnd.nextInt(6)}"
+      if (rnd.nextInt(3) == 0)
+        AttrRow("", id, "knows", ValueRow.nodeid(s"n/${rnd.nextInt(6)}"), 0L,
+          None, None)
+      else
+        AttrRow("", id, Seq("a", "b")(rnd.nextInt(2)),
+          ValueRow.str(Seq("x", "y")(rnd.nextInt(2))), 0L,
+          Seq(None, Some(ValueRow.nodeid("n/9")))(rnd.nextInt(2)),
+          metas(rnd.nextInt(metas.size)))
+    }
+    def fresh(rows: Seq[AttrRow], ts: Long) =
+      spark.createDataset(rows).toDF()
+        .select(lit("").as("graph"), col("id"), col("key"),
+          col("value").cast(graft.model.Value.schema).as("value"),
+          lit(ts).as("ts"),
+          col("key_meta").cast(graft.model.Value.schema).as("key_meta"),
+          col("value_meta").cast(graft.model.Value.schema).as("value_meta"))
+    val cols = Seq("id", "key", "value", "ts", "key_meta", "value_meta")
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+
+    val e = Engine.forEmpty(spark)
+    var fold = Engine.emptyAttrs(spark)
+    (1 to 18).foreach { i =>
+      val batch = Seq.fill(6)(row())
+      val rows = batch ++ batch.take(2) // in-batch duplicates
+      val ts = rnd.nextInt(3).toLong
+      e.load(spark.createDataset(rows), ts)
+      fold = e.merge(fold, fresh(rows, ts))
+      if (i == 10) {
+        e.remove(Seq("n/2"))
+        fold = fold.join(Seq("n/2").toDF("id"), Seq("id"), "left_anti")
+      }
+    }
+    assert(canon(e.nodes) == canon(fold), "flat merge differs from the fold")
+
+    // literal point reads return what the semi-join form returns
+    val all = e.nodes.select(cols.map(col): _*)
+    def semi(ids: org.apache.spark.sql.DataFrame) =
+      all.join(ids, Seq("id"), "left_semi")
+    assert(canon(e.query("""get "n/1" "n/3" "n/7"""")) ==
+      canon(semi(Seq("n/1", "n/3", "n/7").toDF("id"))))
+    val edges = all.where(col("value.vtype") === graft.model.Value.NODEID)
+      .select(col("id").as("src_id"), col("key").as("label"),
+        col("value.iri").as("dst_id"))
+    Seq("n/0", "n/1", "n/4").foreach { r =>
+      val reached = Traversal.follow(spark, edges, Seq(r).toDF("id"), None,
+        0, 2).select("id")
+      assert(canon(e.query(s"""get "$r" |> follow * 0..2""")) ==
+        canon(semi(reached)), s"follow from $r")
+    }
+  }
+
+  test("point get: one merge aggregate with the id filter below it, any puts") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object H extends AdaptiveSparkPlanHelper
+    val q = """get "customer/1""""
+    def executed(e: Engine): SparkPlan = {
+      val df = e.query(q)
+      assert(df.where(col("key") === "name").count() == 1)
+      df.collect() // AQE settles its final plan on execution
+      df.queryExecution.executedPlan
+    }
+    def idFilters(p: SparkPlan) = H.collect(p) {
+      case f: FilterExec if f.condition.references.exists(_.name == "id") &&
+        f.condition.toString.contains("customer/1") => f
+    }
+    // before any put the literal reaches the bucketed scan
+    val scans = H.collect(executed(Engine.forDir(spark, sfDir))) {
+      case s: FileSourceScanExec => s
+    }
+    assert(scans.nonEmpty && scans.forall(s =>
+      s.metadata.getOrElse("PushedFilters", "").contains("(id,customer/1")),
+      s"id not pushed to the scan: ${scans.map(_.metadata)}")
+
+    def afterPuts(n: Int): SparkPlan = {
+      val e = Engine.forDir(spark, sfDir)
+      (1 to n).foreach(i => e.put(s"""put "customer/$i" { "pin": "p$i" }"""))
+      executed(e)
+    }
+    val plans = Seq(1, 7).map(afterPuts)
+    val exchanges = plans.map(p =>
+      H.collect(p) { case x: ShuffleExchangeLike => x }.size)
+    assert(exchanges.distinct.size == 1,
+      s"exchanges grow with puts: $exchanges\n${plans.last}")
+    plans.foreach { p =>
+      val aggs = H.collect(p) { case a: HashAggregateExec => a }
+      assert(aggs.nonEmpty && aggs.forall(a => idFilters(a).nonEmpty),
+        s"id predicate not below the merge aggregate:\n$p")
+    }
+  }
+
+  test("concurrent puts are never lost while a reader queries") {
+    val e = Engine.forEmpty(spark)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val acked = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    @volatile var writing = true
+    val writers = (0 until 4).map { w =>
+      new Thread(() => {
+        go.await()
+        (1 to 6).foreach { i =>
+          try {
+            e.put(s"""put "w/$w" { "seq": "$i" }""")
+            acked.add(s"w/$w" -> i.toString)
+          } catch { case t: Throwable => errors.add(t) }
+        }
+      })
+    }
+    val reader = new Thread(() => {
+      go.await()
+      try while (writing) e.query("""get "w/0" "w/3"""").collect()
+      catch { case t: Throwable => errors.add(t) }
+    })
+    (writers :+ reader).foreach(_.start())
+    go.countDown()
+    writers.foreach(_.join())
+    writing = false
+    reader.join()
+    assert(errors.isEmpty, s"errors: ${errors.asScala.take(3)}")
+    val stored = e.nodes.where(col("key") === "seq")
+      .select(col("id"), col("value.str")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSet
+    val lost = acked.asScala.toSet -- stored
+    assert(acked.size == 24 && lost.isEmpty, s"lost writes: $lost")
   }
 
   test("merge keeps metadata in the dedup key but collapses true duplicates") {
