@@ -36,6 +36,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator extension: SessionizePlan -> SessionizeExec
     // (three scalars of state per partition; see plans/Sessionize)
     e.injectPlannerStrategy(_ => new graft.plans.SessionizeStrategy)
+    // a compacted generation is already deduplicated: its marker plans
+    // as its child, and a min-only merge aggregate over it as a Project
+    // (see plans/DistinctGeneration)
+    e.injectPlannerStrategy(_ => new graft.plans.DistinctGenerationStrategy)
     e.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),

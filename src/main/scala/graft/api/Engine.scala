@@ -102,9 +102,13 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
     * `pending`, and the table reads as ONE union over `base +: pending`
     * under one dedup aggregate — a point read's literal id predicate
     * pushes below it into every branch. Every 8th load compacts:
-    * `base` becomes the merged table, localCheckpoint'ed, and `pending`
-    * empties. Mutators serialize on the engine's lock, so concurrent
-    * puts never lose one another's frames. */
+    * `base` becomes the merged table, localCheckpoint'ed and marked
+    * distinct ([[graft.plans.DistinctGeneration]]). A read whose id
+    * predicate empties every pending branch then plans no aggregate at
+    * all — a filtered scan of the generation, one job; a read that
+    * reaches a pending put keeps the aggregate (min ts). Mutators
+    * serialize on the engine's lock, so concurrent puts never lose one
+    * another's frames. */
   def load(rows: org.apache.spark.sql.Dataset[graft.ingest.AttrRow],
            ts: Long = 0L): Engine = {
     val fresh = rows.toDF()
@@ -117,7 +121,7 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
       pending :+= fresh
       loadSeq += 1
       if (loadSeq % 8 == 0) {
-        base = Engine.dedup(base +: pending).localCheckpoint()
+        base = Engine.generation(Engine.dedup(base +: pending))
         pending = Vector.empty
       }
       publish()
@@ -211,12 +215,10 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
     * order plus its attributes. */
   def first(q: String): Option[DataFrame] = {
     val res = query(q)
-    // materialize ONLY the winning id (limit-pushdown keeps this job
-    // cheap), then semi-join: the attribute query runs once when the
-    // caller acts, instead of an eager collect + a from-scratch re-run
-    val firstId = res.select("id").orderBy("id").limit(1).localCheckpoint()
-    if (firstId.isEmpty) None
-    else Some(res.join(broadcast(firstId), Seq("id"), "left_semi"))
+    // collect ONLY the winning id (one bounded job), then read it by
+    // literal id: the predicate prunes the scan like a point get
+    res.select("id").orderBy("id").limit(1).collect().headOption
+      .map(r => res.where(col("id") === r.getString(0)))
   }
 
   /** Export a query's surviving subgraph as N-Triples text files —
@@ -226,11 +228,13 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
     this
   }
 
-  /** Delete nodes by id (reference Remove, MemoryStore.fs:18-22). */
+  /** Delete nodes by id (reference Remove, MemoryStore.fs:18-22): the
+    * merged table without them becomes the new compacted generation, so
+    * later reads do not re-run the pending merge. */
   def remove(ids: Seq[String]): Engine = {
-    import spark.implicits._
     lock.synchronized {
-      base = attrsDf.join(ids.toDF("id"), Seq("id"), "left_anti")
+      base = Engine.generation(Engine.dedup(base +: pending)
+        .where(!col("id").isInCollection(ids)))
       pending = Vector.empty
       publish()
     }
@@ -282,8 +286,17 @@ object Engine {
     * `"x"@en` and `"x"@fr` are distinct attributes. */
   def dedup(frames: Seq[DataFrame]): DataFrame =
     frames.map(withMeta).reduce(_ unionByName _)
-      .groupBy("graph", "id", "key", "key_meta", "value", "value_meta")
+      .groupBy(dedupKey.map(col): _*)
       .agg(min("ts").as("ts"))
+
+  private val dedupKey =
+    Seq("graph", "id", "key", "key_meta", "value", "value_meta")
+
+  /** A compacted generation: `merged` (a [[dedup]] output, or rows of
+    * one) materialized and marked distinct on the dedup key, so a
+    * later merge over it alone plans as a projection. */
+  private def generation(merged: DataFrame): DataFrame =
+    graft.plans.DistinctGeneration.mark(merged.localCheckpoint(), dedupKey)
 
   /** Add NULL TMD metadata columns to a pre-metadata attribute frame so
     * old and new schemas merge byName. */

@@ -79,18 +79,20 @@ object Traversal {
       s"bad hop range [$fromHop,$toHop]")
     import spark.implicits._
 
-    val rootSample = roots.fold(_.distinct.toArray,
-      _.select(col("id")).distinct()
-        .limit(PointPathMaxFrontier + 1).collect().map(_.getString(0)))
+    // a root frame is read twice past the threshold (the sample, then
+    // the distributed seed): materialize it once
+    val rootFrame = roots.map(_.select(col("id")).distinct().localCheckpoint())
+    val rootSample = rootFrame.fold(_.distinct.toArray,
+      _.limit(PointPathMaxFrontier + 1).collect().map(_.getString(0)))
     if (rootSample.length <= PointPathMaxFrontier) {
       spark.sparkContext.setLocalProperty("graft.traversal.impl", "point")
       followPoint(spark, edges, rootSample, fromHop, toHop)
     } else {
       spark.sparkContext.setLocalProperty("graft.traversal.impl",
         "distributed")
-      val rootDf = roots.fold(_.toDF("id"), _.select(col("id")))
+      val rootDf = rootFrame.fold(_ => rootSample.toSeq.toDF("id"), identity)
       Right(followDistributed(spark, edges,
-        rootDf.distinct().withColumn("hop", lit(0)), fromHop, toHop))
+        rootDf.withColumn("hop", lit(0)), fromHop, toHop))
     }
   }
 
@@ -110,10 +112,12 @@ object Traversal {
 
     while (hop < toHop && frontier.nonEmpty) {
       hop += 1
+      // dedup on the driver: a `.distinct()` here adds an Exchange, and
+      // with it a second job per hop
       val next = edges
         .where(col("src_id").isInCollection(frontier))
-        .select(col("dst_id")).distinct()
-        .collect().map(_.getString(0))
+        .select(col("dst_id"))
+        .collect().map(_.getString(0)).distinct
         .filterNot(visited.contains)
       if (next.length > PointPathMaxFrontier) {
         // frontier exploded: hand the remaining hops to the join loop,

@@ -14,6 +14,12 @@ import graft.model.Value
   * hand (step fusion FileStore.fs:221-269 ≙ CombineFilters/CombineLimits)
   * and the ones it never had (pushdown, pruning).
   *
+  * Steps stay lazy, with two exceptions that end on the driver: a
+  * `take n` page that fits the point path is collected (one bounded
+  * job), and a point-path `follow` runs its hops. Either way the later
+  * steps read a literal id list, which prunes into the store scan and
+  * past the merge of the pending puts.
+  *
   * Semantics notes (deviations documented in SURVEY.md §7.3):
   *  - skip/limit page over ids ORDERED BY id — the reference pages in
   *    arbitrary storage order (risk 2);
@@ -89,13 +95,29 @@ object StepCompiler {
     val all = nodesAttrs.select(
       (Seq("id", "key", "value", "ts") ++ metaCols).map(col): _*)
 
-    // surviving ids: on the driver (Left) while they are known there —
-    // the get roots, a point-path follow — else a frame (Right)
-    var ids: Either[Seq[String], DataFrame] =
-      if (q.scan) Right(all.select("id").distinct())
-      else Left(q.ids.distinct)
-    // scan roots at every node ⇒ the root filter is the identity
-    var attrs: DataFrame = if (q.scan) all else keep(all, ids)
+    // the surviving rows are keep(rows, ids), built once at the end:
+    // `rows` is the table under the fields projections since the last
+    // follow, `ids` the surviving node set — None while every node with
+    // a row survives (a scan), on the driver (Left) while it is known
+    // there (the get roots, a collected page, a point-path follow), else
+    // a lazy frame (Right). `narrowed`: a fields step since `ids` was
+    // set, so nodes left without rows must drop out of the set before
+    // it is paged or followed.
+    var rows = all
+    var ids: Option[Either[Seq[String], DataFrame]] =
+      if (q.scan) None else Some(Left(q.ids.distinct))
+    var narrowed = false
+    def survive(i: Either[Seq[String], DataFrame]): Unit = {
+      ids = Some(i)
+      narrowed = false
+    }
+    // the set a step pages or follows from
+    def live: Either[Seq[String], DataFrame] = ids match {
+      case None => Right(rows.select("id").distinct())
+      case Some(i) if narrowed => Right(keep(rows, i).select("id").distinct())
+      case Some(i) => i
+    }
+    def surviving: DataFrame = ids.fold(rows)(keep(rows, _))
 
     q.steps.foreach {
       case Filter(pred) =>
@@ -111,28 +133,28 @@ object StepCompiler {
           max(when(col("key") === c.key &&
             cmpCol(c.op, col("value"), c.value), 1).otherwise(0)).as(s"f$i")
         }
-        val flagged = attrs.where(col("key").isin(leafKeys: _*))
+        val flagged = surviving.where(col("key").isin(leafKeys: _*))
           .groupBy("id").agg(flags.head, flags.tail: _*)
-        // materialize the surviving ids ONCE: DataFrame plans don't share
-        // common subtrees, so without the barrier this aggregate is
-        // re-inlined at every later reference (the attrs semi-join plus
-        // each subsequent skip/limit/follow step — measured 3× = 17 s on
-        // a07 at sf0.1, vs 2 s for the single-pass a01)
-        ids = Right(flagged.where(boolCol(pred, leaves)).select("id")
-          .localCheckpoint())
-        attrs = keep(attrs, ids)
+        // lazy: the flag aggregate is referenced by `ids` alone, never by
+        // `rows`, so the final keep(rows, ids) holds it once — and a
+        // later `take` collects its page, leaving a literal id list (the
+        // a07 hazard: an aggregate referenced by both the rows and the
+        // paging ids re-ran at each reference, 3× = 17 s at sf0.1)
+        survive(Right(flagged.where(boolCol(pred, leaves)).select("id")))
 
       case Fields(clude) =>
-        attrs = attrs.where(cludeCol(clude))
-        ids = Right(attrs.select("id").distinct())
+        rows = rows.where(cludeCol(clude))
+        narrowed = true
 
       case Skip(n) =>
-        ids = Right(idFrame(spark, ids).orderBy("id").offset(n))
-        attrs = keep(attrs, ids)
+        survive(Right(idFrame(spark, live).orderBy("id").offset(n)))
 
       case Limit(n) =>
-        ids = Right(idFrame(spark, ids).orderBy("id").limit(n))
-        attrs = keep(attrs, ids)
+        // a page that fits the point path is collected in one bounded
+        // job; every later read filters its literal id list
+        val page = idFrame(spark, live).orderBy("id").limit(n)
+        survive(if (n <= Traversal.PointPathMaxFrontier)
+          Left(page.collect().map(_.getString(0)).toSeq) else Right(page))
 
       case Follow(pred, from, to) =>
         // edges come from the FULL table: traversal loads each newly
@@ -144,11 +166,11 @@ object StepCompiler {
             .select(col("id").as("src_id"), col("key").as("label"),
               col("value.iri").as("dst_id")))
         val edges = base.where(edgeCol(pred))
-        ids = Traversal.followEdges(spark, edges, ids, from, to)
-          .fold(hops => Left(hops.map(_._1)), df => Right(df.select("id")))
-        attrs = keep(all, ids)
+        survive(Traversal.followEdges(spark, edges, live, from, to)
+          .fold(hops => Left(hops.map(_._1)), df => Right(df.select("id"))))
+        rows = all
     }
-    attrs
+    surviving
   }
 
   /** Rows of `df` whose id survives: ids on the driver filter a literal

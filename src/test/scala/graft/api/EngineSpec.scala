@@ -207,6 +207,100 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  /** The body's value and the jobs it started (the listener bus
+    * drained on both sides). */
+  private def jobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftInternals.flushListenerBus
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    flushListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      flushListenerBus(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  private def aggs(df: org.apache.spark.sql.DataFrame): Int = H.collect(
+    df.queryExecution.executedPlan) {
+    case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
+  }.size
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Int = H.collect(
+    df.queryExecution.executedPlan) {
+    case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => x
+  }.size
+
+  test("reads that miss the pending puts run one job per point read, no shuffle") {
+    // 8 puts compact into a generation marked distinct; one more put on
+    // A stays pending and duplicates an attribute A holds there
+    val (a, b) = ("customer/1", "customer/2")
+    val e = Engine.forDir(spark, sfDir)
+    e.put(s"""put "$a" { "pin": "x" }""", ts = 3L)
+    (3 to 9).foreach(i => e.put(s"""put "customer/$i" { "pin": "p$i" }"""))
+    e.put(s"""put "$a" { "pin": "x" }""", ts = 1L)
+
+    val getB = e.query(s"""get "$b"""")
+    val (rows, getJobs) = jobs(getB.collect())
+    assert(getJobs == 1)
+    assert(rows.nonEmpty && rows.forall(_.getAs[String]("id") == b))
+    assert(exchanges(getB) == 0 && aggs(getB) == 0,
+      s"get $b planned a shuffle:\n${getB.queryExecution.executedPlan}")
+
+    // a read that reaches the pending put keeps the merge: min ts wins
+    val getA = e.query(s"""get "$a"""")
+    val pins = getA.where(col("key") === "pin").select("ts").collect()
+    assert(pins.map(_.getLong(0)).toSeq == Seq(1L))
+    assert(aggs(getA) > 0)
+
+    // two driver-side hops and the final read
+    val (reached, followJobs) = jobs(e.query(s"""get "$b" |> follow * 0..2""")
+      .select("id").collect().map(_.getString(0)).toSet)
+    assert(followJobs == 3 && reached.size == 3 && reached.contains(b))
+
+    // the page is collected once; the final read filters its ids
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (page, scanJobs) = jobs(e.query(
+      """get "*" |> filter "nation" == ^"nation/1" |> take 10""")
+      .select("id").collect().map(_.getString(0)).toSet)
+    assert(scanJobs <= 3 && page.size == 6, s"$scanJobs jobs for $page")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "the scan persisted an RDD")
+  }
+
+  test("remove commits a distinct generation; first reads its winner by id") {
+    val e = Engine.forDir(spark, sfDir)
+    e.put("""put "customer/1" { "pin": "x" }""")
+    e.remove(Seq("customer/3"))
+    assert(aggs(e.nodes) == 0, "remove left a lazy merge behind")
+    assert(e.query("""get "customer/3"""").isEmpty)
+    assert(e.query("""get "customer/1"""").where(col("key") === "pin")
+      .count() == 1)
+    // a later pending put does not put the merge back on other reads
+    e.put("""put "customer/1" { "pin": "y" }""")
+    val getB = e.query("""get "customer/2"""")
+    assert(jobs(getB.collect())._2 == 1 && aggs(getB) == 0)
+
+    // the winner is read by literal id: no join beyond the query's own
+    // (whose semi-join the id predicate may even drop from pruned branches)
+    val q = """get "*" |> filter "nation" == ^"nation/16""""
+    def semis(df: org.apache.spark.sql.DataFrame) =
+      "LeftSemi".r.findAllIn(df.queryExecution.optimizedPlan.toString).size
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val f = e.first(q).get
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    assert(f.select("id").distinct().collect().map(_.getString(0)).toSeq ==
+      Seq("customer/107"))
+    assert(semis(f) <= semis(e.query(q)) &&
+      f.queryExecution.optimizedPlan.toString.contains("= customer/107"),
+      s"first joins its winner:\n${f.queryExecution.optimizedPlan}")
+  }
+
   test("concurrent puts are never lost while a reader queries") {
     val e = Engine.forEmpty(spark)
     val go = new java.util.concurrent.CountDownLatch(1)

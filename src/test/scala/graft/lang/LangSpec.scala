@@ -117,18 +117,29 @@ class LangSpec extends SparkSpec {
     // the a07 regression: DataFrame plans don't share common subtrees,
     // so the filter-step aggregate was re-computed at every downstream
     // reference (3× in filter+limit queries, 17 s at sf0.1). The fix
-    // materializes surviving ids behind a localCheckpoint barrier — the
-    // final plan must contain ZERO flag aggregates (they ran inside the
-    // checkpoint job) and scan the checkpointed RDD instead.
-    import org.apache.spark.sql.functions._
+    // collects the `take` page's ids in one bounded job — the final
+    // plan must contain ZERO flag aggregates (they ran inside that job)
+    // and filter the page's literal id list instead of joining ids.
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
     val attrs = graft.graph.GraphView.nodesAttrs(spark, sfDir)
     val out = StepCompiler.run(spark, attrs, AhgheeParser.parse(
       """get "*" |> filter "acctbal" > 1000 |> take 5"""))
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("f0#") && !plan.toLowerCase.contains("max(f0"),
       s"flag aggregate re-inlined into the final plan:\n$plan")
-    assert(plan.contains("Scan ExistingRDD"),
-      s"expected a checkpointed-ids scan in:\n$plan")
+    val lp = out.queryExecution.optimizedPlan
+    // the id predicate is pushed into each scan branch, where `id` is
+    // the expression that builds it
+    val literalIds = lp.collect { case f: Filter => f.condition }.exists(_.exists {
+      case In(_, vs) => vs.nonEmpty && vs.forall(_.foldable)
+      case _: InSet => true
+      case _ => false
+    })
+    assert(literalIds && lp.collect {
+      case j: Join if j.joinType == LeftSemi => j }.isEmpty,
+      s"expected a literal id list and no LeftSemi join in:\n$lp")
   }
 
   test("numeric filters compare across the numeric family, not by vtype") {
