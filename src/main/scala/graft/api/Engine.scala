@@ -138,8 +138,9 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
   /** Continuous put: stream an N-Triples directory into the graph, one
     * `load` per micro-batch — the reference's chunked `Load` with
     * backpressure and a progress stream (WatService.cs:241-300;
-    * `maxFilesPerTrigger` ≙ the bounded Channel(1000), attach
-    * [[graft.ingest.LoadProgress]] for the 1 s ticks). AvailableNow
+    * `maxFilesPerTrigger` ≙ the bounded Channel(1000); the returned
+    * query's `recentProgress` holds one entry per micro-batch, which
+    * `/load?stream=progress` relays). AvailableNow
     * drains everything present, then terminates — callers wanting a
     * forever-tailing load pass a ProcessingTime trigger instead. */
   def loadStream(dir: String, maxFilesPerTrigger: Int = 10,

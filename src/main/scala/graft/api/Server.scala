@@ -2,10 +2,13 @@ package graft.api
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.StructType
 
+import graft.QueryStats
 import graft.ingest.{GraphMlReader, NTriplesReader}
 
 /** Network service over the Engine — the Spark-native analog of the
@@ -19,7 +22,8 @@ import graft.ingest.{GraphMlReader, NTriplesReader}
   *   POST /sql      body = one SQL statement          → NDJSON row stream
   *   POST /load     body = path or http(s) url,
   *                  ?format=nt|graphml                → {"ok":true}
-  *   GET  /metrics                                    → JSON entries
+  *   GET  /metrics                                    → JSON entries, the
+  *                  last [[QueryStats.Keep]] Dataset actions
   *
   * /get STREAMS: rows flow from `query(...).toLocalIterator` into a
   * chunked response, partition-at-a-time on the driver — the gRPC
@@ -27,17 +31,17 @@ import graft.ingest.{GraphMlReader, NTriplesReader}
   * response stream as they arrive); nothing is collected.
   */
 final class Server private (val engine: Engine, http: HttpServer,
-                            metrics: Metrics,
+                            stats: QueryStats,
                             pool: java.util.concurrent.ExecutorService) {
   def port: Int = http.getAddress.getPort
-  def stop(): Unit = { http.stop(0); pool.shutdown(); metrics.close() }
+  def stop(): Unit = { http.stop(0); pool.shutdown(); stats.detach() }
 }
 
 object Server {
 
   /** Start serving `engine` on `port` (0 = ephemeral). */
   def start(engine: Engine, port: Int = 0): Server = {
-    val metrics = Metrics.attach(engine.spark)
+    val stats = QueryStats.attach(engine.spark)
     val http = HttpServer.create(new java.net.InetSocketAddress(port), 0)
     // without an executor every handler runs on the single dispatcher
     // thread — a minutes-long streaming /load would freeze /get and
@@ -61,19 +65,10 @@ object Server {
       // stream-of-Node-messages shape, WatService.cs:319-343); default
       // streams long-form attribute rows
       val q = body(ex)
-      val df = Option(ex.getRequestURI.getQuery)
+      streamRows(ex, Option(ex.getRequestURI.getQuery)
         .filter(_.contains("shape=nodes"))
         .map(_ => engine.getNodes(q).toDF())
-        .getOrElse(engine.query(q))
-      val schema = df.schema
-      ex.getResponseHeaders.add("Content-Type", "application/x-ndjson")
-      ex.sendResponseHeaders(200, 0) // chunked — length unknown up front
-      val out = ex.getResponseBody
-      try {
-        val it = df.toLocalIterator()
-        while (it.hasNext)
-          out.write((jsonRow(schema, it.next()) + "\n").getBytes(UTF_8))
-      } finally out.close()
+        .getOrElse(engine.query(q)))
     })
 
     http.createContext("/sql", (ex: HttpExchange) => guard(ex) {
@@ -84,16 +79,7 @@ object Server {
       // COSINE_TOPK plan into the custom execs from this endpoint).
       // Same streaming discipline as /get: toLocalIterator into a
       // chunked NDJSON response, nothing collected.
-      val df = engine.spark.sql(body(ex))
-      val schema = df.schema
-      ex.getResponseHeaders.add("Content-Type", "application/x-ndjson")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      try {
-        val it = df.toLocalIterator()
-        while (it.hasNext)
-          out.write((jsonRow(schema, it.next()) + "\n").getBytes(UTF_8))
-      } finally out.close()
+      streamRows(ex, engine.spark.sql(body(ex)))
     })
 
     http.createContext("/load", (ex: HttpExchange) => guard(ex) {
@@ -107,48 +93,32 @@ object Server {
         // the reference's Load RETURNS a stream: one LoadFileResponse
         // per second until ingest finishes (WatService.cs:262-300).
         // Here: run the continuous put (nt dir source) and relay each
-        // micro-batch tick as an NDJSON line as it lands, then a final
-        // summary — the client watches rows accumulate, exactly the
-        // gRPC progress-stream shape
-        val progress = graft.ingest.LoadProgress.attach(engine.spark)
+        // micro-batch of the load query's own `recentProgress` as an
+        // NDJSON line as it lands, then a final summary — the client
+        // watches rows accumulate, exactly the gRPC progress-stream
+        // shape
         ex.getResponseHeaders.add("Content-Type", "application/x-ndjson")
         ex.sendResponseHeaders(200, 0)
         val out = ex.getResponseBody
         try {
           val sq = engine.loadStream(path)
-          // scope the relay to THIS load's ticks: any other streaming
-          // query active in the session (a concurrent load, a registry
-          // stream) reports through the same listener and would pollute
-          // the feed and inflate total_rows
-          val mine = Set(Option(sq.name), Some(sq.id.toString)).flatten
-          var seen = 0
-          def myTicks() = progress.snapshot().filter(t => mine(t.name))
-          def relay(): Unit = {
-            val ticks = myTicks()
-            while (seen < ticks.size) {
-              val t = ticks(seen)
-              out.write((s"""{"batch":${t.batchId},"rows":${t.rows}}""" +
+          var last = -1L
+          var total = 0L
+          def relay(): Unit =
+            sq.recentProgress.filter(_.batchId > last).foreach { p =>
+              out.write((s"""{"batch":${p.batchId},"rows":${p.numInputRows}}""" +
                 "\n").getBytes(UTF_8))
               out.flush()
-              seen += 1
+              last = p.batchId
+              total += p.numInputRows
             }
-          }
-          while (sq.isActive) { relay(); Thread.sleep(100) }
-          sq.awaitTermination()
-          // listener delivery is async — grace-poll until the tick feed
-          // has delivered something and gone quiet, so the final
-          // batches aren't dropped
-          val deadline = System.nanoTime() + 10_000_000_000L
-          var quiet = 0
-          while (quiet < 3 && System.nanoTime() < deadline) {
-            val before = seen
-            Thread.sleep(200)
-            relay()
-            quiet = if (seen == before && seen > 0) quiet + 1 else 0
-          }
-          out.write((s"""{"done":true,"total_rows":${myTicks().map(_.rows).sum}}""" +
-            "\n").getBytes(UTF_8))
-        } finally { progress.detach(); out.close() }
+          while (!sq.awaitTermination(100)) relay()
+          // the query fills recentProgress before it terminates: this
+          // pass sees its last batches
+          relay()
+          out.write((s"""{"done":true,"total_rows":$total}""" + "\n")
+            .getBytes(UTF_8))
+        } finally out.close()
       } else {
         val rows = format match {
           case "graphml" => GraphMlReader.read(engine.spark, path)
@@ -179,13 +149,7 @@ object Server {
         try out.write(bytes) finally out.close()
       } else {
         val lines = graft.ingest.NTriplesWriter.lines(engine.query(q))
-        ex.getResponseHeaders.add("Content-Type", "application/n-triples")
-        ex.sendResponseHeaders(200, 0)
-        val out = ex.getResponseBody
-        try {
-          val it = lines.toLocalIterator()
-          while (it.hasNext) out.write((it.next() + "\n").getBytes(UTF_8))
-        } finally out.close()
+        stream(ex, "application/n-triples")(lines.toLocalIterator().asScala)
       }
     })
 
@@ -217,13 +181,10 @@ object Server {
           conf.get("spark.sql.streaming.stateStore.providerClass",
             "HDFSBackedStateStoreProvider").split("\\.").last))
         .filter { case (id, _, _) => iris.forall(_(id)) }
-      ex.getResponseHeaders.add("Content-Type", "application/x-ndjson")
-      ex.sendResponseHeaders(200, 0)
-      val out = ex.getResponseBody
-      try rows.foreach { case (id, key, value) =>
-        out.write((s"""{"id":${q(id)},"key":${q(key)},"value":${q(value)}}""" +
-          "\n").getBytes(UTF_8))
-      } finally out.close()
+      stream(ex, "application/x-ndjson")(rows.iterator.map {
+        case (id, key, value) =>
+          s"""{"id":${q(id)},"key":${q(key)},"value":${q(value)}}"""
+      })
     })
 
     http.createContext("/stats", (ex: HttpExchange) => guard(ex) {
@@ -234,7 +195,7 @@ object Server {
     })
 
     http.createContext("/metrics", (ex: HttpExchange) => guard(ex) {
-      val entries = metrics.snapshot().map { e =>
+      val entries = stats.executions.map { e =>
         s"""{"action":${q(e.action)},"duration_ns":${e.durationNs},""" +
           s""""error":${e.error.map(q).getOrElse("null")}}"""
       }
@@ -242,7 +203,7 @@ object Server {
     })
 
     http.start()
-    new Server(engine, http, metrics, pool)
+    new Server(engine, http, stats, pool)
   }
 
   private def guard(ex: HttpExchange)(f: => Unit): Unit =
@@ -262,6 +223,25 @@ object Server {
     ex.sendResponseHeaders(code, bytes.length.toLong)
     val out = ex.getResponseBody
     try out.write(bytes) finally out.close()
+  }
+
+  /** A chunked 200 response of `lines`, one per line. The iterator is
+    * built once the headers are out, so the jobs behind it run while the
+    * client reads and nothing is collected. */
+  private def stream(ex: HttpExchange, contentType: String)(
+      lines: => Iterator[String]): Unit = {
+    ex.getResponseHeaders.add("Content-Type", contentType)
+    ex.sendResponseHeaders(200, 0) // chunked — length unknown up front
+    val out = ex.getResponseBody
+    try lines.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
+    finally out.close()
+  }
+
+  /** `df` as an NDJSON stream, one [[jsonRow]] per row. */
+  private def streamRows(ex: HttpExchange, df: DataFrame): Unit = {
+    val schema = df.schema
+    stream(ex, "application/x-ndjson")(
+      df.toLocalIterator().asScala.map(jsonRow(schema, _)))
   }
 
   /** One Row → one JSON object line (nested structs/arrays/maps recurse;

@@ -41,8 +41,8 @@ object NTriplesReader {
     * `maxFilesPerTrigger` bounds each batch (the backpressure analog of
     * the reference's Channel(1000) between reader and writer,
     * FileStorePartition.fs:26); progress/cancellation ride Structured
-    * Streaming: attach a [[LoadProgress]] listener for the reference's
-    * 1 s progress stream (WatService.cs:262-291), stop() the query to
+    * Streaming: the started query's `recentProgress` is the reference's
+    * progress stream (WatService.cs:262-291), stop() the query to
     * cancel. */
   def stream(spark: SparkSession, dir: String, graph: String = "",
              maxFilesPerTrigger: Int = 10): Dataset[AttrRow] = {

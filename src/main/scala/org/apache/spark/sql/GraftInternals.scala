@@ -35,6 +35,15 @@ object GraftInternals {
   def flushListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** (action, duration ns) of a SQL execution that ran a named action
+    * (`collect`, `count`, `toLocalIterator`, a write) in `spark`: the
+    * filter of Spark's own ExecutionListenerBus. `executionName`,
+    * `duration` and `qe` are `private[sql]` vars Spark sets before
+    * posting the event. */
+  def namedAction(e: execution.ui.SparkListenerSQLExecutionEnd,
+      spark: SparkSession): Option[(String, Long)] =
+    e.executionName.filter(_ => e.qe.sparkSession eq spark).map(_ -> e.duration)
+
   /** Unload every loaded streaming state-store provider and stop the
     * maintenance thread (they restart lazily on the next stateful
     * query). A finished stream's providers otherwise linger up to the

@@ -210,20 +210,14 @@ class EngineSpec extends SparkSpec {
   /** The body's value and the jobs it started (the listener bus
     * drained on both sides). */
   private def jobs[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.GraftInternals.flushListenerBus
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    flushListenerBus(sc)
-    sc.addSparkListener(l)
+    val stats = graft.QueryStats.attach(spark)
     try {
+      stats.flush()
+      stats.reset()
       val out = body
-      flushListenerBus(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(l)
+      stats.flush()
+      (out, stats.totals.jobs)
+    } finally stats.detach()
   }
 
   private object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -350,18 +344,14 @@ class EngineSpec extends SparkSpec {
   }
 
   test("metrics listener records completed query executions") {
-    val m = Metrics.attach(spark)
+    val m = graft.QueryStats.attach(spark)
     try {
       spark.range(10).count()
-      // listener delivery is async; poll briefly
-      var snap = m.snapshot()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (snap.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(100); snap = m.snapshot()
-      }
+      m.flush()
+      val snap = m.executions
       assert(snap.nonEmpty && snap.forall(_.error.isEmpty))
-      assert(snap.exists(_.durationNs > 0))
-    } finally m.close()
+      assert(snap.exists(e => e.action == "count" && e.durationNs > 0), snap)
+    } finally m.detach()
   }
 
   test("cosine_sim is callable from SQL via GraftExtensions") {

@@ -47,8 +47,21 @@ class ServerSpec extends SparkSpec {
       assert(lines.exists(l => l.contains("\"key\":\"knows\"") &&
         l.contains("\"iri\":\"s/2\"")))
 
+      // the served get's action, with its duration and no error
+      org.apache.spark.sql.GraftInternals.flushListenerBus(spark.sparkContext)
       val (mc, mb) = request(s"$base/metrics", "GET")
-      assert(mc == 200 && mb.startsWith("["))
+      assert(mc == 200 && mb.startsWith("["), mb)
+      val served = """\{"action":"toLocalIterator","duration_ns":(\d+),"error":null\}""".r
+        .findAllMatchIn(mb).map(_.group(1).toLong).toSeq
+      assert(served.nonEmpty && served.forall(_ > 0), mb)
+      // a statement that fails inside its action reports the error: the
+      // shuffle's map stage raises before the first row is served
+      scala.util.Try(request(s"$base/sql", "POST", Some(
+        "SELECT id % 2 AS k, count(*) AS n FROM range(10) " +
+          "WHERE raise_error('boom') IS NULL GROUP BY id % 2")))
+      org.apache.spark.sql.GraftInternals.flushListenerBus(spark.sparkContext)
+      val (_, failed) = request(s"$base/metrics", "GET")
+      assert(""""error":"(\\.|[^"\\])*boom""".r.findFirstIn(failed).nonEmpty, failed)
 
       val (sc, sb) = request(s"$base/stats", "GET")
       assert(sc == 200, sb)
@@ -256,6 +269,9 @@ class ServerSpec extends SparkSpec {
       assert(lines.init.forall(_.contains("\"rows\":")), text)
       assert(lines.last.contains("\"done\":true") &&
         lines.last.contains("\"total_rows\":3"), text)
+      val rows = lines.init.map(l => """"rows":(\d+)""".r
+        .findFirstMatchIn(l).get.group(1).toLong)
+      assert(rows.sum == 3, text)
       assert(engine.nodes.count() == 3)
     } finally srv.stop()
   }

@@ -145,27 +145,21 @@ class IngestSpec extends SparkSpec {
       "<s/1> <name> \"a\" .\n<s/1> <size> \"1\"^^<http://t/int> .\n")
     java.nio.file.Files.writeString(dir.resolve("b.nt"),
       "<s/2> <name> \"b\"@en .\n")
-    val progress = LoadProgress.attach(spark)
-    try {
-      val q = NTriplesReader.stream(spark, dir.toString, maxFilesPerTrigger = 1)
-        .writeStream.format("memory").queryName("nt_load")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_nt_ck").toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(60000)
-      // listener delivery is async; poll briefly for the final tick
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (progress.totalRows < 3 && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(spark.table("nt_load").count() == 3)
-      assert(progress.totalRows == 3,
-        s"progress ticks: ${progress.snapshot()}")
-      assert(progress.snapshot().count(_.rows > 0) >= 2) // incremental
-      // value metadata survives the streaming path
-      assert(spark.table("nt_load")
-        .where(org.apache.spark.sql.functions.col("value_meta").isNotNull)
-        .count() == 2)
-    } finally progress.detach()
+    val q = NTriplesReader.stream(spark, dir.toString, maxFilesPerTrigger = 1)
+      .writeStream.format("memory").queryName("nt_load")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft_nt_ck").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(60000))
+    // the query's own progress, complete once it has terminated
+    val ticks = q.recentProgress.map(_.numInputRows)
+    assert(spark.table("nt_load").count() == 3)
+    assert(ticks.sum == 3, s"progress ticks: ${ticks.toSeq}")
+    assert(ticks.count(_ > 0) >= 2) // incremental
+    // value metadata survives the streaming path
+    assert(spark.table("nt_load")
+      .where(org.apache.spark.sql.functions.col("value_meta").isNotNull)
+      .count() == 2)
   }
 
   // ---- AHGHEE put literals --------------------------------------------
