@@ -1,11 +1,13 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.ingest.AhgheePut
+import graft.ingest.{AhgheePut, AttrRow, ValueRow}
 import graft.lang.{AhgheeParser, StepCompiler}
 import graft.model.Value
 
@@ -25,14 +27,19 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
                    edges0: Option[DataFrame] = None) {
 
   /** Last compacted generation (at first the caller's frame, TMD
-    * metadata columns added if it predates them) and the put/load frames
-    * since then. Only mutators touch these, under `lock`. */
+    * metadata columns added if it predates them), the load frames since
+    * then, and the put buffer: every put's rows since then, as rows of
+    * [[Engine.attrsSchema]] held on the driver — the in-memory component
+    * the reference's FASTER store is to its checkpoints
+    * (NodeAttrIndex.cs:183-232). Only mutators touch these, under
+    * `lock`. */
   private var base: DataFrame = Engine.withMeta(attrs0)
-  private var pending: Vector[DataFrame] = Vector.empty
-  private var loadSeq = 0L
+  private var loads: Vector[DataFrame] = Vector.empty
+  private var buffer: Vector[Row] = Vector.empty
+  private var mutations = 0L
   private val lock = new Object
-  /** Current attribute table: `base` merged with `pending` on read.
-    * Readers take this snapshot without locking. */
+  /** Current attribute table: `base` merged with `loads` and `buffer` on
+    * read. Readers take this snapshot without locking. */
   @volatile private var attrsDf: DataFrame = base
   /** Pre-derived edge view; invalidated by mutation. */
   @volatile private var edgesHint: Option[DataFrame] = edges0
@@ -86,10 +93,17 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
 
   /** Ingest AHGHEE `put` literals: append + merge-dedup keeping the
     * first-write timestamp (reference FileStore.fs:82-89 stamps at
-    * write; NodeAttrIndex.cs:221 dedups identical attributes). */
+    * write; NodeAttrIndex.cs:221 dedups identical attributes). The
+    * parsed rows, stamped `ts`, join the driver-held put buffer: a put
+    * builds no Dataset and runs no job, except the every-8th compaction
+    * (see [[load]]). */
   def put(script: String, ts: Long = 0L): Engine = {
-    import spark.implicits._
-    load(spark.createDataset(AhgheePut.parse(script)), ts)
+    val rows = AhgheePut.parse(script).map(Engine.row(_, ts))
+    lock.synchronized {
+      buffer ++= rows
+      mutated()
+    }
+    this
   }
 
   /** Ingest pre-parsed attribute rows (the N-Triples / GraphML readers'
@@ -99,16 +113,18 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
     *
     * Merge-on-read, as the reference merges fragments and compacts on a
     * cadence (NodeAttrIndex.cs:74,115-121): a load appends its frame to
-    * `pending`, and the table reads as ONE union over `base +: pending`
-    * under one dedup aggregate — a point read's literal id predicate
-    * pushes below it into every branch. Every 8th load compacts:
-    * `base` becomes the merged table, localCheckpoint'ed and marked
-    * distinct ([[graft.plans.DistinctGeneration]]). A read whose id
-    * predicate empties every pending branch then plans no aggregate at
-    * all — a filtered scan of the generation, one job; a read that
-    * reaches a pending put keeps the aggregate (min ts). Mutators
-    * serialize on the engine's lock, so concurrent puts never lose one
-    * another's frames. */
+    * `loads`, a put its rows to the buffer, and the table reads as ONE
+    * union over `base +: loads :+ buffer` under one dedup aggregate; all
+    * buffered puts are one `LocalRelation` branch. A point read's
+    * literal id predicate pushes below the aggregate into every branch.
+    * Every 8th mutation (put or load) compacts: `base` becomes the
+    * merged table, localCheckpoint'ed and marked distinct
+    * ([[graft.plans.DistinctGeneration]]), and the frames and the
+    * buffer are cleared. A read whose id predicate empties every other
+    * branch then plans no aggregate at all — a filtered scan of the
+    * generation, one job; a read that reaches a pending put keeps the
+    * aggregate (min ts). Mutators serialize on the engine's lock, so
+    * concurrent puts never lose one another's rows. */
   def load(rows: org.apache.spark.sql.Dataset[graft.ingest.AttrRow],
            ts: Long = 0L): Engine = {
     val fresh = rows.toDF()
@@ -118,20 +134,34 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
         col("key_meta").cast(Value.schema).as("key_meta"),
         col("value_meta").cast(Value.schema).as("value_meta"))
     lock.synchronized {
-      pending :+= fresh
-      loadSeq += 1
-      if (loadSeq % 8 == 0) {
-        base = Engine.generation(Engine.dedup(base +: pending))
-        pending = Vector.empty
-      }
-      publish()
+      loads :+= fresh
+      mutated()
     }
     this
   }
 
+  /** Count a mutation, compact on every 8th, publish; under `lock`. */
+  private def mutated(): Unit = {
+    mutations += 1
+    if (mutations % 8 == 0) commit(merged)
+    publish()
+  }
+
+  /** `base`, `loads` and the put buffer under one dedup; under `lock`. */
+  private def merged: DataFrame = Engine.dedup((base +: loads) ++
+    Option.when(buffer.nonEmpty)(
+      spark.createDataFrame(buffer.asJava, Engine.attrsSchema)))
+
+  /** Make `gen` the compacted generation; under `lock`. */
+  private def commit(gen: DataFrame): Unit = {
+    base = Engine.generation(gen)
+    loads = Vector.empty
+    buffer = Vector.empty
+  }
+
   /** Expose the merged table to readers; called under `lock`. */
   private def publish(): Unit = {
-    attrsDf = if (pending.isEmpty) base else Engine.dedup(base +: pending)
+    attrsDf = if (loads.isEmpty && buffer.isEmpty) base else merged
     edgesHint = None // graph mutated — derive edges from attrs again
   }
 
@@ -234,9 +264,7 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
     * later reads do not re-run the pending merge. */
   def remove(ids: Seq[String]): Engine = {
     lock.synchronized {
-      base = Engine.generation(Engine.dedup(base +: pending)
-        .where(!col("id").isInCollection(ids)))
-      pending = Vector.empty
+      commit(merged.where(!col("id").isInCollection(ids)))
       publish()
     }
     this
@@ -273,12 +301,21 @@ object Engine {
     StructField("key_meta", Value.schema),
     StructField("value_meta", Value.schema)))
 
+  /** One parsed attribute as a row of [[attrsSchema]], stamped `ts` —
+    * the row `load` makes of it (graph "", the VALUE structs
+    * positional). */
+  private def row(a: AttrRow, ts: Long): Row =
+    Row("", a.id, a.key, value(a.value), ts,
+      a.key_meta.map(value).orNull, a.value_meta.map(value).orNull)
+
+  private def value(v: ValueRow): Row =
+    Row(v.vtype, v.str.orNull, v.i64.getOrElse(null), v.num.getOrElse(null),
+      v.b.getOrElse(null), v.iri.orNull, v.type_iri.orNull, v.bytes.orNull)
+
   /** An empty attribute table — the seed for an Engine populated purely
     * by put/load. */
   def emptyAttrs(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      attrsSchema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), attrsSchema)
 
   /** Merge-on-read dedup over attribute frames: identical (id,
     * key+key_meta, value+value_meta) keeps min ts — one union, one

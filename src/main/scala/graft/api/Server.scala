@@ -225,15 +225,19 @@ object Server {
     try out.write(bytes) finally out.close()
   }
 
-  /** A chunked 200 response of `lines`, one per line. The iterator is
-    * built once the headers are out, so the jobs behind it run while the
-    * client reads and nothing is collected. */
+  /** A chunked 200 response of `lines`, one per line. The first line is
+    * pulled before the headers go out, so a statement whose first job
+    * fails still gets `guard`'s 400; the later jobs run while the client
+    * reads, and nothing is collected. A failure in a later partition,
+    * after the 200 is sent, can only truncate the stream. */
   private def stream(ex: HttpExchange, contentType: String)(
-      lines: => Iterator[String]): Unit = {
+      lines: Iterator[String]): Unit = {
+    val it = lines.buffered
+    it.hasNext // runs the jobs up to the first line
     ex.getResponseHeaders.add("Content-Type", contentType)
     ex.sendResponseHeaders(200, 0) // chunked — length unknown up front
     val out = ex.getResponseBody
-    try lines.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
+    try it.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
     finally out.close()
   }
 

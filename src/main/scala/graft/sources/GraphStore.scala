@@ -22,10 +22,10 @@ import graft.graph.GraphView
   *    the same locality the reference gets from grouping fragments.
   *
   * Materialization happens once per (session, dir) on first use. Puts
-  * never rewrite the store: the Engine keeps them as pending frames
-  * merged on read with this scan under one dedup aggregate
-  * (NodeAttrIndex.cs:221 semantics), and its periodic compaction
-  * checkpoints the merged table in memory.
+  * never rewrite the store: the Engine keeps its puts as rows of one
+  * driver-held buffer and its loads as frames, merged on read with this
+  * scan under one dedup aggregate (NodeAttrIndex.cs:221 semantics), and
+  * its periodic compaction checkpoints the merged table in memory.
   *
   * VERSIONED storage lives in the sibling V2 connector
   * (sources/v2: the `graft` format + GraftCatalog): the same bucketed

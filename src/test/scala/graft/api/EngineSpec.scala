@@ -122,13 +122,6 @@ class EngineSpec extends SparkSpec {
           Seq(None, Some(ValueRow.nodeid("n/9")))(rnd.nextInt(2)),
           metas(rnd.nextInt(metas.size)))
     }
-    def fresh(rows: Seq[AttrRow], ts: Long) =
-      spark.createDataset(rows).toDF()
-        .select(lit("").as("graph"), col("id"), col("key"),
-          col("value").cast(graft.model.Value.schema).as("value"),
-          lit(ts).as("ts"),
-          col("key_meta").cast(graft.model.Value.schema).as("key_meta"),
-          col("value_meta").cast(graft.model.Value.schema).as("value_meta"))
     val cols = Seq("id", "key", "value", "ts", "key_meta", "value_meta")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
@@ -140,7 +133,7 @@ class EngineSpec extends SparkSpec {
       val rows = batch ++ batch.take(2) // in-batch duplicates
       val ts = rnd.nextInt(3).toLong
       e.load(spark.createDataset(rows), ts)
-      fold = e.merge(fold, fresh(rows, ts))
+      fold = e.merge(fold, stamped(rows, ts))
       if (i == 10) {
         e.remove(Seq("n/2"))
         fold = fold.join(Seq("n/2").toDF("id"), Seq("id"), "left_anti")
@@ -163,6 +156,116 @@ class EngineSpec extends SparkSpec {
       assert(canon(e.query(s"""get "$r" |> follow * 0..2""")) ==
         canon(semi(reached)), s"follow from $r")
     }
+  }
+
+  /** Attribute rows as `load` stamps them: graph "", the call's ts. */
+  private def stamped(rows: Seq[graft.ingest.AttrRow], ts: Long) =
+    spark.createDataset(rows).toDF()
+      .select(lit("").as("graph"), col("id"), col("key"),
+        col("value").cast(graft.model.Value.schema).as("value"),
+        lit(ts).as("ts"),
+        col("key_meta").cast(graft.model.Value.schema).as("key_meta"),
+        col("value_meta").cast(graft.model.Value.schema).as("value_meta"))
+
+  /** Every row as sorted JSON text (binary values render as base64). */
+  private def canonJson(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(to_json(struct(
+      Seq("graph", "id", "key", "value", "ts", "key_meta", "value_meta")
+        .map(col): _*))).collect().map(_.getString(0)).sorted.toSeq
+
+  /** A seeded AHGHEE put script over nodes n/0..n/3: plain and `^"key"`
+    * reference keys, every value form the put parser sniffs. */
+  private def putScript(rnd: scala.util.Random): String = {
+    def value(): String = rnd.nextInt(10) match {
+      case 0 => s"\"s${rnd.nextInt(3)}\""
+      case 1 => rnd.nextInt(100).toString                // i32
+      case 2 => (3000000000L + rnd.nextInt(3)).toString  // i64
+      case 3 => "18446744073709551615"                   // ui64
+      case 4 => "2.5"                                    // f32
+      case 5 => "1e300"                                  // d
+      case 6 => Seq("true", "false")(rnd.nextInt(2))
+      case 7 => """{"a": [1, 2]}"""                      // JSON bytes
+      case _ => s"^\"n/${rnd.nextInt(4)}\""
+    }
+    def key(): String =
+      if (rnd.nextInt(3) == 0) s"^\"n/${rnd.nextInt(4)}\""
+      else s"\"k${rnd.nextInt(3)}\""
+    Seq.fill(1 + rnd.nextInt(2)) {
+      s"\"n/${rnd.nextInt(4)}\" { " +
+        Seq.fill(1 + rnd.nextInt(4))(s"${key()}: ${value()}").mkString(", ") +
+        " }"
+    }.mkString("put ", " ", "")
+  }
+
+  test("puts form one in-memory relation; a plain put runs no job") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def locals(e: Engine) = e.nodes.queryExecution.analyzed.collect {
+      case l: LocalRelation => l
+    }
+    val e = Engine.forDir(spark, sfDir)
+    val putJobs = (1 to 7).map(i =>
+      jobs(e.put(s"""put "customer/$i" { "pin": "p$i", "n": $i }"""))._2)
+    assert(putJobs.forall(_ == 0), s"jobs per put: $putJobs")
+    assert(locals(e).size == 1 && locals(e).head.data.size == 14,
+      s"puts are not one relation:\n${e.nodes.queryExecution.analyzed}")
+    // the 8th put compacts the buffer into the generation
+    assert(jobs(e.put("""put "customer/8" { "pin": "p8" }"""))._2 > 0)
+    assert(locals(e).isEmpty)
+    assert(e.query("""get "customer/3"""").where(col("key") === "pin")
+      .select("value.str").collect().map(_.getString(0)).toSeq == Seq("p3"))
+  }
+
+  test("a put holds exactly the rows a load of its parsed script holds") {
+    import graft.ingest.AhgheePut
+    val rnd = new scala.util.Random(11)
+    val (viaPut, viaLoad) = (Engine.forEmpty(spark), Engine.forEmpty(spark))
+    (1 to 10).foreach { i => // all buffered at 7, one compaction by 10
+      val script = putScript(rnd)
+      val ts = rnd.nextInt(4).toLong
+      viaPut.put(script, ts)
+      viaLoad.load(spark.createDataset(AhgheePut.parse(script)), ts)
+      if (i == 7 || i == 10)
+        assert(canonJson(viaPut.nodes) == canonJson(viaLoad.nodes),
+          s"put and load differ after $i scripts")
+    }
+    assert(canonJson(viaPut.nodes).exists(_.contains("\"key\":\"^n/")),
+      "no ^\"key\" reference was put")
+  }
+
+  test("puts, loads and a remove across two compactions equal the nested merge fold") {
+    import graft.ingest.{AhgheePut, AttrRow, ValueRow}
+    val rnd = new scala.util.Random(9)
+    def rows(): Seq[AttrRow] = Seq.fill(4)(AttrRow("", s"n/${rnd.nextInt(4)}",
+      s"k${rnd.nextInt(3)}", ValueRow.str(s"s${rnd.nextInt(3)}")))
+    // one attribute put three times: at ts 5, after the first compaction
+    // at ts 2, and pending at the end at ts 4 — min ts (2) wins
+    val dup = """put "n/1" { "dup": "v" }"""
+    val dupTs = Map(3 -> 5L, 12 -> 2L, 17 -> 4L)
+    val e = Engine.forEmpty(spark)
+    var fold = Engine.emptyAttrs(spark)
+    (1 to 18).foreach { i =>
+      val ts = rnd.nextInt(4).toLong
+      if (dupTs.contains(i)) {
+        e.put(dup, dupTs(i))
+        fold = e.merge(fold, stamped(AhgheePut.parse(dup), dupTs(i)))
+      } else if (rnd.nextBoolean()) {
+        val script = putScript(rnd)
+        e.put(script, ts)
+        fold = e.merge(fold, stamped(AhgheePut.parse(script), ts))
+      } else {
+        val batch = rows()
+        e.load(spark.createDataset(batch), ts)
+        fold = e.merge(fold, stamped(batch, ts))
+      }
+      if (i == 10) {
+        e.remove(Seq("n/2"))
+        fold = fold.where(col("id") =!= "n/2")
+      }
+    }
+    assert(canonJson(e.nodes) == canonJson(fold),
+      "puts and loads differ from the fold")
+    assert(e.query("""get "n/1"""").where(col("key") === "dup")
+      .select("ts").collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
   test("point get: one merge aggregate with the id filter below it, any puts") {

@@ -55,10 +55,13 @@ class ServerSpec extends SparkSpec {
         .findAllMatchIn(mb).map(_.group(1).toLong).toSeq
       assert(served.nonEmpty && served.forall(_ > 0), mb)
       // a statement that fails inside its action reports the error: the
-      // shuffle's map stage raises before the first row is served
-      scala.util.Try(request(s"$base/sql", "POST", Some(
+      // shuffle's map stage raises before the first row is served, so
+      // the client gets the 400, not an empty 200
+      val (ec, eb) = request(s"$base/sql", "POST", Some(
         "SELECT id % 2 AS k, count(*) AS n FROM range(10) " +
-          "WHERE raise_error('boom') IS NULL GROUP BY id % 2")))
+          "WHERE raise_error('boom') IS NULL GROUP BY id % 2"))
+      assert(ec == 400 && eb.contains("\"ok\":false") && eb.contains("boom"),
+        s"$ec $eb")
       org.apache.spark.sql.GraftInternals.flushListenerBus(spark.sparkContext)
       val (_, failed) = request(s"$base/metrics", "GET")
       assert(""""error":"(\\.|[^"\\])*boom""".r.findFirstIn(failed).nonEmpty, failed)
