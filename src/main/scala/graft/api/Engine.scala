@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.graph.Adjacency
 import graft.ingest.{AhgheePut, AttrRow, ValueRow}
 import graft.lang.{AhgheeParser, StepCompiler}
 import graft.model.Value
@@ -38,17 +39,29 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
   private var buffer: Vector[Row] = Vector.empty
   private var mutations = 0L
   private val lock = new Object
-  /** Current attribute table: `base` merged with `loads` and `buffer` on
-    * read. Readers take this snapshot without locking. */
-  @volatile private var attrsDf: DataFrame = base
-  /** Pre-derived edge view; invalidated by mutation. */
-  @volatile private var edgesHint: Option[DataFrame] = edges0
+  /** What readers see, published by each mutator as one
+    * [[Engine.Snapshot]]: the attribute table (`base` merged with
+    * `loads` and `buffer` on read), the pre-derived edge view while the
+    * graph is unmutated, and the driver-held adjacency. Readers take it
+    * without locking. */
+  @volatile private var snapshot = new Engine.Snapshot(base, edges0, None,
+    Engine.adjacency(spark, base, Vector.empty, Vector.empty, edges0))
 
-  def nodes: DataFrame = attrsDf
+  def nodes: DataFrame = snapshot.attrs
+
+  /** The current snapshot's adjacency (None over the limit), built here
+    * if no follow has built it yet. */
+  private[api] def adjacency: Option[Adjacency] = snapshot.adjacency
 
   /** Run an AHGHEE `get` query; returns surviving attribute rows. */
-  def query(q: String): DataFrame =
-    StepCompiler.run(spark, attrsDf, AhgheeParser.parse(q), edgesHint)
+  def query(q: String): DataFrame = runGet(AhgheeParser.parse(q))
+
+  /** A parsed `get` over one snapshot: its table, edge view and
+    * adjacency. */
+  private def runGet(q: graft.lang.GetQuery): DataFrame = {
+    val s = snapshot
+    StepCompiler.run(spark, s.attrs, q, s.edgesHint, () => s.adjacency)
+  }
 
   /** Run an AHGHEE `get` query and group the surviving rows into typed
     * Nodes — the reference's return shape (stream of Node messages,
@@ -86,8 +99,7 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
         load(graft.ingest.GraphMlReader.read(spark, path)); None
       case LoadStmt(_, path) =>
         load(graft.ingest.NTriplesReader.read(spark, path)); None
-      case GetStmt(q) =>
-        Some(StepCompiler.run(spark, attrsDf, q, edgesHint))
+      case GetStmt(q) => Some(runGet(q))
     }
   }
 
@@ -101,7 +113,11 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
     val rows = AhgheePut.parse(script).map(Engine.row(_, ts))
     lock.synchronized {
       buffer ++= rows
-      mutated()
+      // the rows' edges fold into a built adjacency; one the fold takes
+      // past the limit is left for the next follow to find over it, and
+      // one over the limit stays over, as a put only adds edges
+      mutated(snapshot.built.map(_.map(_ ++ Engine.edges(rows)))
+        .filter(_.forall(Adjacency.within(spark, _))))
     }
     this
   }
@@ -135,16 +151,19 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
         col("value_meta").cast(Value.schema).as("value_meta"))
     lock.synchronized {
       loads :+= fresh
-      mutated()
+      // a load only adds edges: over the limit stays over; otherwise the
+      // next follow builds the adjacency again
+      mutated(snapshot.built.filter(_.isEmpty))
     }
     this
   }
 
-  /** Count a mutation, compact on every 8th, publish; under `lock`. */
-  private def mutated(): Unit = {
+  /** Count a mutation, compact on every 8th, publish with `adjacency`
+    * (see [[publish]]); under `lock`. */
+  private def mutated(adjacency: Option[Option[Adjacency]]): Unit = {
     mutations += 1
     if (mutations % 8 == 0) commit(merged)
-    publish()
+    publish(adjacency)
   }
 
   /** `base`, `loads` and the put buffer under one dedup; under `lock`. */
@@ -152,17 +171,23 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
     Option.when(buffer.nonEmpty)(
       spark.createDataFrame(buffer.asJava, Engine.attrsSchema)))
 
-  /** Make `gen` the compacted generation; under `lock`. */
+  /** Make `gen` the compacted generation; under `lock`. A compaction
+    * changes no edge, so it keeps the adjacency. */
   private def commit(gen: DataFrame): Unit = {
     base = Engine.generation(gen)
     loads = Vector.empty
     buffer = Vector.empty
   }
 
-  /** Expose the merged table to readers; called under `lock`. */
-  private def publish(): Unit = {
-    attrsDf = if (loads.isEmpty && buffer.isEmpty) base else merged
-    edgesHint = None // graph mutated — derive edges from attrs again
+  /** Expose the merged table to readers; called under `lock`. The edge
+    * view is derived from the table again. The adjacency is the one
+    * given, carried from the last snapshot without a job (None over the
+    * limit); when none is given the snapshot builds it on first use,
+    * outside the lock, from the state published here. */
+  private def publish(adjacency: Option[Option[Adjacency]]): Unit = {
+    val (b, l, r) = (base, loads, buffer)
+    snapshot = new Engine.Snapshot(if (l.isEmpty && r.isEmpty) b else merged,
+      None, adjacency, Engine.adjacency(spark, b, l, r, None))
   }
 
   /** Continuous put: stream an N-Triples directory into the graph, one
@@ -202,22 +227,19 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
     * the full relational surface over the same data. Re-call after
     * mutations to refresh the snapshot the views capture. */
   def registerViews(prefix: String = "graft"): Engine = {
-    attrsDf.createOrReplaceTempView(s"${prefix}_nodes")
-    edgesView.createOrReplaceTempView(s"${prefix}_edges")
+    val s = snapshot
+    s.attrs.createOrReplaceTempView(s"${prefix}_nodes")
+    s.edgesHint.getOrElse(Adjacency.edgesOf(s.attrs))
+      .createOrReplaceTempView(s"${prefix}_edges")
     this
   }
-
-  private def edgesView: DataFrame = edgesHint.getOrElse(
-    attrsDf.where(col("value.vtype") === Value.NODEID)
-      .select(col("id").as("src_id"), col("key").as("label"),
-        col("value.iri").as("dst_id")))
 
   /** Graph statistics in one aggregate pass — the reference's
     * GetStats/ListStats surface (types.proto:231-239;
     * FileStore.fs:415-485 serializes its registry the same way):
     * long-form [stat, value] rows for attrs / nodes / keys / edges. */
   def stats: DataFrame = {
-    attrsDf.agg(
+    nodes.agg(
       count(lit(1)).as("attrs"),
       countDistinct(col("id")).as("nodes"),
       countDistinct(col("key")).as("keys"),
@@ -234,12 +256,12 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
   def current: DataFrame = {
     val w = Window.partitionBy("id", "key")
       .orderBy(col("ts").desc, Value.sortKey(col("value")).desc)
-    attrsDf.withColumn("rn", row_number().over(w))
+    nodes.withColumn("rn", row_number().over(w))
       .where(col("rn") === 1).drop("rn")
   }
 
   /** All versions ordered by write time — the "history" view. */
-  def history: DataFrame = attrsDf.orderBy("id", "key", "ts")
+  def history: DataFrame = nodes.orderBy("id", "key", "ts")
 
   /** First node matching a query (reference First,
     * MemoryStore.fs:38-43): the id of the first surviving node in id
@@ -261,11 +283,12 @@ final class Engine(val spark: SparkSession, attrs0: DataFrame,
 
   /** Delete nodes by id (reference Remove, MemoryStore.fs:18-22): the
     * merged table without them becomes the new compacted generation, so
-    * later reads do not re-run the pending merge. */
+    * later reads do not re-run the pending merge. A built adjacency
+    * drops the ids' out-edges; one over the limit is built again. */
   def remove(ids: Seq[String]): Engine = {
     lock.synchronized {
       commit(merged.where(!col("id").isInCollection(ids)))
-      publish()
+      publish(snapshot.built.flatMap(_.map(a => Some(a -- ids))))
     }
     this
   }
@@ -290,6 +313,43 @@ object Engine {
   /** Engine over an empty graph — populated purely by put/load. */
   def forEmpty(spark: SparkSession): Engine =
     new Engine(spark, emptyAttrs(spark))
+
+  /** One published state of an engine: its attribute table, the edge
+    * view while the graph is unmutated, and its adjacency — `carried`
+    * from the previous snapshot, or else `build`'s, run on first use
+    * (one bounded collect, outside the engine's lock; concurrent first
+    * readers wait for the one build). None means over the limit. */
+  private final class Snapshot(val attrs: DataFrame,
+                               val edgesHint: Option[DataFrame],
+                               carried: Option[Option[Adjacency]],
+                               build: () => Option[Adjacency]) {
+    @volatile private var held = carried
+    def adjacency: Option[Adjacency] = held.getOrElse(synchronized {
+      if (held.isEmpty) held = Some(build())
+      held.get
+    })
+    /** The adjacency if this snapshot has it; never builds it. */
+    def built: Option[Option[Adjacency]] = held
+  }
+
+  /** The build of a snapshot's adjacency over `base`, the load frames
+    * and the put buffer: one bounded collect of the edge view (or of
+    * the union of the frames' edges — no dedup aggregate, the adjacency
+    * is a set), then the buffer's edges folded in on the driver. */
+  private def adjacency(spark: SparkSession, base: DataFrame,
+                        loads: Vector[DataFrame], buffer: Vector[Row],
+                        edgesHint: Option[DataFrame])
+      : () => Option[Adjacency] = () =>
+    Adjacency.collect(spark, edgesHint.getOrElse(
+        (base +: loads).map(Adjacency.edgesOf).reduce(_ unionByName _)))
+      .map(_ ++ edges(buffer)).filter(Adjacency.within(spark, _))
+
+  /** The edges among rows of [[attrsSchema]]: (id, key, value.iri) of
+    * each NODEID-valued row. */
+  private def edges(rows: Iterable[Row]): Iterable[(String, String, String)] =
+    rows.collect { case r if r.getStruct(3).getInt(0) == Value.NODEID =>
+      (r.getString(1), r.getString(2), r.getStruct(3).getString(5))
+    }
 
   /** Full nodes_attrs schema including the TMD metadata columns. */
   val attrsSchema: StructType = StructType(Seq(

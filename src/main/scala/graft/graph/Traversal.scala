@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 /** Recursive edge expansion — the reference's `follow` operator
   * (semantics: src/core/FileStore.fs:166-220,373-392; grammar
   * AHGHEE.g4:138-162). Spark has no recursive CTE, so the loop runs on
-  * the driver as iterative joins over the `edges` view — the same shape
-  * GraphX Pregel uses.
+  * the driver: a small frontier hops by lookups in the snapshot's
+  * driver-held [[Adjacency]] (no job) or by one `src_id IN (frontier)`
+  * scan each, a large one as iterative joins over the `edges` view —
+  * the same shape GraphX Pregel uses.
   *
   * Invariants (reference tests, src/core.tests/Tests.fs:882-900):
   *  - a node is emitted at most once per query (visited-set dedup; the
@@ -15,14 +17,15 @@ import org.apache.spark.sql.functions._
   *    rather than probabilistic);
   *  - the hop window [fromHop, toHop] gates emission: the reference
   *    decrements a Range per hop and emits while it covers 0
-  *    (FileStore.fs:180-186).
+  *    (FileStore.fs:180-186);
+  *  - an edge with no `dst_id` reaches no node, in every arm.
   *
-  * Scale: each iteration is one shuffle (frontier ⋈ edges on src_id).
-  * With `edges` bucketed by src_id the join co-locates; the visited set
-  * is carried as a DataFrame and `localCheckpoint`ed each hop to cut
-  * lineage growth (iterative-join folklore; also what Pregel does).
-  * Frontiers are typically ≪ |edges|, so the frontier side broadcasts
-  * under AQE once it fits.
+  * Scale: each distributed iteration is one shuffle (frontier ⋈ edges
+  * on src_id). With `edges` bucketed by src_id the join co-locates; the
+  * visited set is carried as a DataFrame and `localCheckpoint`ed each
+  * hop to cut lineage growth (iterative-join folklore; also what Pregel
+  * does). Frontiers are typically ≪ |edges|, so the frontier side
+  * broadcasts under AQE once it fits.
   */
 object Traversal {
 
@@ -45,39 +48,52 @@ object Traversal {
   }
 
   /** Frontiers up to this size run the point-lookup path: ids held on the
-    * driver, each hop one scan with `src_id IN (...)` pushed to parquet.
-    * Beyond it, the distributed join loop takes over. 10k ids ≈ a few
-    * hundred KB in the IN-list — well under filter-pushdown limits. */
+    * driver, each hop adjacency lookups or one scan with `src_id IN (...)`
+    * pushed to parquet. Beyond it, the distributed join loop takes over.
+    * 10k ids ≈ a few hundred KB in the IN-list — well under
+    * filter-pushdown limits. */
   val PointPathMaxFrontier = 10000
 
   /** Same loop over an already-predicate-filtered edge set (the query
     * compiler passes arbitrary label predicates through here).
     *
-    * Two physical strategies behind one semantic:
-    *  - small frontier (the common `get <id> |> follow` shape): keep the
-    *    frontier + visited set on the driver, each hop is a single
-    *    `src_id IN (frontier)` filter that pushes down to the scan — on a
-    *    bucketed 100 TB table that prunes to the frontier's buckets, no
-    *    shuffle at all;
+    * Three physical strategies behind one semantic:
+    *  - small frontier over a driver-held adjacency (the common
+    *    `get <id> |> follow` shape on an engine snapshot): frontier and
+    *    visited set stay on the driver and each hop is map lookups that
+    *    keep the edges whose label passes `label` — the predicate
+    *    `edges` was filtered by — so the hops run no job at all;
+    *  - small frontier, no adjacency (none given, or more edges than
+    *    the [[graft.graphx.Arms]] limit in force): each hop is a single
+    *    `src_id IN (frontier)` filter that pushes down to the scan — on
+    *    a bucketed 100 TB table that prunes to the frontier's buckets,
+    *    no shuffle at all;
     *  - large frontier (whole-graph expansion): distributed joins with an
     *    exact anti-join visited set, `localCheckpoint` per hop to cut
     *    lineage. The point path hands off mid-traversal the moment a
     *    frontier outgrows the threshold.
     *
     * Roots are held on the driver (Left) or in a DataFrame [id] (Right).
-    * The result stays on the driver — (id, hop) pairs — when the point
-    * path runs to the end, so the caller can filter a literal id column;
-    * otherwise it is the [id, hop] frame.
+    * `adjacency` is asked for only when the point path runs, and `edges`
+    * only when a hop or the hand-off reads it: a query over the lookups
+    * does not even plan the edge view. The result
+    * stays on the driver — (id, hop) pairs — when the point path runs to
+    * the end, so the caller can filter a literal id column; otherwise it
+    * is the [id, hop] frame.
     */
   def followEdges(
       spark: SparkSession,
-      edges: DataFrame,
+      edges: => DataFrame,
       roots: Either[Seq[String], DataFrame],
       fromHop: Int,
-      toHop: Int): Either[Seq[(String, Int)], DataFrame] = {
+      toHop: Int,
+      adjacency: () => Option[Adjacency] = () => None,
+      label: String => Boolean = _ => true)
+      : Either[Seq[(String, Int)], DataFrame] = {
     require(toHop >= 0 && fromHop >= 0 && fromHop <= toHop,
       s"bad hop range [$fromHop,$toHop]")
     import spark.implicits._
+    lazy val edgeSet = edges
 
     // a root frame is read twice past the threshold (the sample, then
     // the distributed seed): materialize it once
@@ -86,39 +102,47 @@ object Traversal {
       _.limit(PointPathMaxFrontier + 1).collect().map(_.getString(0)))
     if (rootSample.length <= PointPathMaxFrontier) {
       spark.sparkContext.setLocalProperty("graft.traversal.impl", "point")
-      followPoint(spark, edges, rootSample, fromHop, toHop)
+      followPoint(spark, edgeSet, rootSample, fromHop, toHop,
+        Adjacency.inForce(spark, adjacency), label)
     } else {
       spark.sparkContext.setLocalProperty("graft.traversal.impl",
         "distributed")
       val rootDf = rootFrame.fold(_ => rootSample.toSeq.toDF("id"), identity)
-      Right(followDistributed(spark, edges,
+      Right(followDistributed(spark, edgeSet,
         rootDf.withColumn("hop", lit(0)), fromHop, toHop))
     }
   }
 
-  /** Driver-side frontier loop; falls back to the distributed loop if a
-    * frontier outgrows the threshold. */
+  /** Driver-side frontier loop: each hop by adjacency lookups when one
+    * is given, else by one `src_id IN` scan; falls back to the
+    * distributed loop if a frontier outgrows the threshold. */
   private def followPoint(
       spark: SparkSession,
-      edges: DataFrame,
+      edges: => DataFrame,
       rootIds: Array[String],
       fromHop: Int,
-      toHop: Int): Either[Seq[(String, Int)], DataFrame] = {
+      toHop: Int,
+      adjacency: Option[Adjacency],
+      label: String => Boolean): Either[Seq[(String, Int)], DataFrame] = {
     import scala.collection.mutable
     val visited = mutable.LinkedHashMap[String, Int]()
     rootIds.foreach(id => visited(id) = 0)
     var frontier: Array[String] = rootIds
     var hop = 0
+    def targets(frontier: Array[String]): Iterator[String] = adjacency match {
+      case Some(a) => frontier.iterator.flatMap(a.targets(_, label))
+      case None =>
+        // dedup on the driver: a `.distinct()` here adds an Exchange,
+        // and with it a second job per hop
+        edges.where(col("src_id").isInCollection(frontier) &&
+            col("dst_id").isNotNull)
+          .select(col("dst_id")).collect().iterator.map(_.getString(0))
+    }
 
     while (hop < toHop && frontier.nonEmpty) {
       hop += 1
-      // dedup on the driver: a `.distinct()` here adds an Exchange, and
-      // with it a second job per hop
-      val next = edges
-        .where(col("src_id").isInCollection(frontier))
-        .select(col("dst_id"))
-        .collect().map(_.getString(0)).distinct
-        .filterNot(visited.contains)
+      val next = targets(frontier).distinct.filterNot(visited.contains)
+        .toArray
       if (next.length > PointPathMaxFrontier) {
         // frontier exploded: hand the remaining hops to the join loop,
         // seeded with everything reached so far
@@ -153,7 +177,8 @@ object Traversal {
       startFrontier: Option[Array[String]] = None): DataFrame = {
     // materialize the (filtered) edge set once: each hop re-joins it,
     // and without this every iteration re-reads the source scans
-    val ed0 = edges.select(col("src_id"), col("dst_id"))
+    val ed0 = edges.where(col("dst_id").isNotNull)
+      .select(col("src_id"), col("dst_id"))
     val ed = if (toHop - startHop > 1) ed0.localCheckpoint() else ed0
 
     var visited = seed.localCheckpoint()

@@ -688,16 +688,19 @@ object GraphAnalytics {
     // probe. The guard needs BOTH bounds: a negative id (legal — e.g.
     // raw xxhash64-derived) would set the high 32 bits through
     // bitwiseOR and corrupt the packed key, so minId < 0 falls back to
-    // the two-key join, same as ids past 2^31.
+    // the two-key join, same as ids past 2^31. The same aggregate
+    // counts the pair rows, which bound every degree (see packable).
     val bounds = pairs.agg(
         coalesce(greatest(max("p1"), max("p2")), lit(0L)).as("mx"),
-        coalesce(least(min("p1"), min("p2")), lit(0L)).as("mn"))
+        coalesce(least(min("p1"), min("p2")), lit(0L)).as("mn"),
+        count(lit(1)).as("n"))
       .first()
-    val (maxId, minId) = (bounds.getLong(0), bounds.getLong(1))
-    val tri = if (minId >= 0L && maxId < (1L << 31)) {
+    val tri = if (packable(bounds.getLong(0), bounds.getLong(1),
+        bounds.getLong(2))) {
       // packed-NEIGHBOR key nk = dt<<32 | t (r10, guide §2.3 narrower
-      // types): ids fit unsigned 31 bits, so a vertex's degree fits 31
-      // bits too (≤ |V|−1 < 2³¹) and (dt, t) packs losslessly into one
+      // types): ids fit unsigned 31 bits, and so does every degree dt
+      // (at most the pair rows, duplicates included), so (dt, t) packs
+      // losslessly into one
       // non-negative long whose numeric order IS the (degree, id)
       // orientation order. The checkpointed directed edge list narrows
       // from (s, t, dt) to (s, nk) — one-third fewer bytes through the
@@ -733,6 +736,13 @@ object GraphAnalytics {
     }
     tri
   }
+
+  /** Whether [[triangleList]]'s packed keys are lossless: ids in
+    * [0, 2³¹) fill the low 32 bits without touching the sign, and a
+    * degree — a row count of the pair list, so at most `rows` even when
+    * the list repeats an edge — fits 31 bits in the high half. */
+  private[graphx] def packable(maxId: Long, minId: Long, rows: Long): Boolean =
+    minId >= 0L && maxId < (1L << 31) && rows < (1L << 31)
 
   def triangleCounts(pairs0: DataFrame): DataFrame =
     // ONE pass over the triangle list: corners explode in place — a

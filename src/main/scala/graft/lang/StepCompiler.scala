@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.graph.Traversal
+import graft.graph.{Adjacency, Traversal}
 import graft.ingest.ValueRow
 import graft.model.Value
 
@@ -87,9 +87,12 @@ object StepCompiler {
     * `edgesHint` short-circuits edge derivation with a pre-built
     * [src_id, label, dst_id] view (skips scanning the non-edge attribute
     * branches — Engine passes GraphView.edges while the graph is
-    * unmodified). */
+    * unmodified). `adjacency` yields the same graph's driver-held
+    * out-edges (Engine passes its snapshot's, built on first use): a
+    * point-path follow then hops by lookups and runs no job. */
   def run(spark: SparkSession, nodesAttrs: DataFrame, q: GetQuery,
-          edgesHint: Option[DataFrame] = None): DataFrame = {
+          edgesHint: Option[DataFrame] = None,
+          adjacency: () => Option[Adjacency] = () => None): DataFrame = {
     val metaCols =
       Seq("key_meta", "value_meta").filter(nodesAttrs.columns.contains)
     val all = nodesAttrs.select(
@@ -161,12 +164,10 @@ object StepCompiler {
         // reached node fresh from storage (the reference's QueryNodes
         // recursion re-enters LoadNode, FileStore.fs:389), so a prior
         // fields projection does not amputate the frontier's edges
-        val base = edgesHint.getOrElse(
-          all.where(col("value.vtype") === Value.NODEID)
-            .select(col("id").as("src_id"), col("key").as("label"),
-              col("value.iri").as("dst_id")))
-        val edges = base.where(edgeCol(pred))
-        survive(Traversal.followEdges(spark, edges, live, from, to)
+        def edges = edgesHint.getOrElse(Adjacency.edgesOf(all))
+          .where(edgeCol(pred))
+        survive(Traversal.followEdges(spark, edges, live, from, to,
+            adjacency, edgeTest(pred))
           .fold(hops => Left(hops.map(_._1)), df => Right(df.select("id"))))
         rows = all
     }
@@ -244,9 +245,19 @@ object StepCompiler {
     case StringPart => lit(!isKey) && col("value.vtype") === Value.STR
   }
 
-  private def edgeCol(p: EdgePred): Column = p match {
+  private[graft] def edgeCol(p: EdgePred): Column = p match {
     case AnyEdge => lit(true)
     case LabelEdge(l) => col("label") === l
     case OrEdge(a, b) => edgeCol(a) || edgeCol(b)
+  }
+
+  /** [[edgeCol]] on the driver, for adjacency lookups: a null label
+    * passes only `AnyEdge`, as the column's null comparison drops it. */
+  private[graft] def edgeTest(p: EdgePred): String => Boolean = p match {
+    case AnyEdge => _ => true
+    case LabelEdge(l) => _ == l
+    case OrEdge(a, b) =>
+      val (f, g) = (edgeTest(a), edgeTest(b))
+      label => f(label) || g(label)
   }
 }

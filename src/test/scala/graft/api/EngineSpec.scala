@@ -203,16 +203,65 @@ class EngineSpec extends SparkSpec {
       case l: LocalRelation => l
     }
     val e = Engine.forDir(spark, sfDir)
-    val putJobs = (1 to 7).map(i =>
-      jobs(e.put(s"""put "customer/$i" { "pin": "p$i", "n": $i }"""))._2)
+    e.adjacency // built: each put folds its edges in, still without a job
+    val putJobs = (1 to 7).map(i => jobs(e.put(
+      s"""put "customer/$i" { "pin": "p$i", "n": $i, "e": ^"customer/9" }"""))._2)
     assert(putJobs.forall(_ == 0), s"jobs per put: $putJobs")
-    assert(locals(e).size == 1 && locals(e).head.data.size == 14,
+    assert(locals(e).size == 1 && locals(e).head.data.size == 21,
       s"puts are not one relation:\n${e.nodes.queryExecution.analyzed}")
-    // the 8th put compacts the buffer into the generation
-    assert(jobs(e.put("""put "customer/8" { "pin": "p8" }"""))._2 > 0)
+    // the 8th put compacts the buffer into the generation: the merge is
+    // materialized and marked distinct, the adjacency carried over
+    assert(jobs(e.put("""put "customer/8" { "pin": "p8" }"""))._2 == 2)
     assert(locals(e).isEmpty)
+    assert(jobs(e.adjacency)._2 == 0)
+    // a load is lazy too, with or without a built adjacency
+    val fresh = Engine.forEmpty(spark)
+    import graft.ingest.{AttrRow, ValueRow}
+    val rows = spark.createDataset(Seq(
+      AttrRow("", "l/1", "e", ValueRow.nodeid("l/2"))))
+    assert(jobs(e.load(rows))._2 == 0 && jobs(fresh.load(rows))._2 == 0)
     assert(e.query("""get "customer/3"""").where(col("key") === "pin")
       .select("value.str").collect().map(_.getString(0)).toSeq == Seq("p3"))
+  }
+
+  test("a carried adjacency equals a fresh build; follows equal the scan arm's") {
+    import graft.graph.Adjacency
+    import graft.ingest.{AttrRow, ValueRow}
+    // seeded puts that add edges (two labels, a dangling target n/6),
+    // with compactions at the 8th and 16th mutation, a remove and a load;
+    // `z` takes the same mutations and follows with the threshold at 0
+    val rnd = new scala.util.Random(21)
+    def edgePut(): String = s"""put "n/${rnd.nextInt(6)}" { "${
+      Seq("x", "y")(rnd.nextInt(2))}": ^"n/${rnd.nextInt(7)}", "k": "v${
+      rnd.nextInt(3)}" }"""
+    val (e, z) = (Engine.forEmpty(spark), Engine.forEmpty(spark))
+    def reached(eng: Engine, q: String): Set[String] = eng.query(q)
+      .select("id").distinct().collect().map(_.getString(0)).toSet
+    def scanArm[T](body: => T): T = {
+      spark.conf.set(graft.graphx.Arms.LimitConf, "0")
+      try body finally spark.conf.unset(graft.graphx.Arms.LimitConf)
+    }
+    val follows = Seq("""get "n/0" |> follow * 0..3""",
+      """get "n/1" "n/4" |> follow "x" 1..2""",
+      """get "n/2" |> follow ("x" || "y") 2""")
+    (1 to 20).foreach { i =>
+      val loaded = i == 14
+      if (i == 9) Seq(e, z).foreach(_.remove(Seq("n/3")))
+      else if (loaded) Seq(e, z).foreach(_.load(spark.createDataset(Seq(
+        AttrRow("", "n/5", "y", ValueRow.nodeid("n/6")),
+        AttrRow("", "n/6", "x", ValueRow.nodeid("n/0"))))))
+      else { val p = edgePut(); Seq(e, z).foreach(_.put(p)) }
+      // after the first step's build, a put, remove or compaction
+      // carries the adjacency without a job; a load builds it again
+      val (carried, carryJobs) = jobs(e.adjacency)
+      assert(i == 1 || loaded || carryJobs == 0, s"step $i ran $carryJobs jobs")
+      assert(carried.map(_.edges) ==
+        Adjacency.collect(spark, Adjacency.edgesOf(e.nodes)).map(_.edges),
+        s"step $i: carried adjacency differs from a fresh build")
+      follows.foreach(q =>
+        assert(reached(e, q) == scanArm(reached(z, q)), s"step $i: $q"))
+    }
+    assert(e.adjacency.exists(_.edges.exists(_._3 == "n/6")))
   }
 
   test("a put holds exactly the rows a load of its parsed script holds") {
@@ -355,10 +404,19 @@ class EngineSpec extends SparkSpec {
     assert(pins.map(_.getLong(0)).toSeq == Seq(1L))
     assert(aggs(getA) > 0)
 
-    // two driver-side hops and the final read
-    val (reached, followJobs) = jobs(e.query(s"""get "$b" |> follow * 0..2""")
-      .select("id").collect().map(_.getString(0)).toSet)
-    assert(followJobs == 3 && reached.size == 3 && reached.contains(b))
+    // the snapshot's first follow builds its adjacency (one bounded
+    // collect) and reads the reached ids; a later follow hops by lookups
+    // and only reads; the per-hop scan arm pays a job per hop
+    val follow = s"""get "$b" |> follow * 0..2"""
+    def reach() = e.query(follow).select("id").collect().map(_.getString(0))
+      .toSet
+    val (reached, firstJobs) = jobs(reach())
+    assert(firstJobs <= 2 && reached.size == 3 && reached.contains(b),
+      s"$firstJobs jobs for $reached")
+    assert(jobs(reach()) == (reached, 1))
+    spark.conf.set(graft.graphx.Arms.LimitConf, "0")
+    try assert(jobs(reach()) == (reached, 3))
+    finally spark.conf.unset(graft.graphx.Arms.LimitConf)
 
     // the page is collected once; the final read filters its ids
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
@@ -368,6 +426,16 @@ class EngineSpec extends SparkSpec {
     assert(scanJobs <= 3 && page.size == 6, s"$scanJobs jobs for $page")
     assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
       "the scan persisted an RDD")
+
+    // a load leaves the next snapshot's adjacency unbuilt; a follow at
+    // limit 0 does not build it, so once the limit is lifted the first
+    // follow builds it and a later one hops by lookups again
+    import graft.ingest.{AttrRow, ValueRow}
+    e.load(spark.createDataset(Seq(AttrRow("", "l/1", "e", ValueRow.nodeid(b)))))
+    spark.conf.set(graft.graphx.Arms.LimitConf, "0")
+    try assert(jobs(reach()) == (reached, 3))
+    finally spark.conf.unset(graft.graphx.Arms.LimitConf)
+    assert(jobs(reach())._1 == reached && jobs(reach()) == (reached, 1))
   }
 
   test("remove commits a distinct generation; first reads its winner by id") {
@@ -555,8 +623,13 @@ class EngineSpec extends SparkSpec {
     java.nio.file.Files.writeString(dir.resolve("b.nt"),
       "<s/2> <name> \"b\" .\n<s/1> <name> \"a\" .\n")
     val e = Engine.forEmpty(spark)
-    val q = e.loadStream(dir.toString, maxFilesPerTrigger = 1)
-    q.awaitTermination(60000)
+    val (_, streamJobs) = jobs(e.loadStream(dir.toString, maxFilesPerTrigger = 1)
+      .awaitTermination(60000))
+    // a built adjacency adds no job to the stream's loads
+    val built = Engine.forEmpty(spark)
+    built.adjacency
+    assert(jobs(built.loadStream(dir.toString, maxFilesPerTrigger = 1)
+      .awaitTermination(60000))._2 == streamJobs)
     val rows = e.nodes.select("id", "key").collect()
       .map(r => (r.getString(0), r.getString(1)))
     assert(rows.length == 3, s"merged rows: ${rows.toSeq}") // dup collapsed

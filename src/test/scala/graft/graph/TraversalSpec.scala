@@ -79,4 +79,83 @@ class TraversalSpec extends SparkSpec {
     assert(viaHandoff == viaDistributed,
       "hand-off path diverged from the pure distributed loop")
   }
+
+  test("arms agree: adjacency, per-hop scan and distributed on random graphs") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.lang.{AnyEdge, EdgePred, LabelEdge, OrEdge, StepCompiler}
+    // 8 nodes; targets include a dangling id and null, labels include
+    // null; small edge lists over few nodes make cycles, self-loops
+    // and duplicate edges common (each is asserted to occur below)
+    val node = Gen.choose(0, 7).map(i => s"n/$i")
+    val dst = Gen.frequency(8 -> node, 1 -> Gen.const("gone/1"),
+      1 -> Gen.const(null: String))
+    val label = Gen.frequency(3 -> Gen.oneOf("x", "y", "z"),
+      1 -> Gen.const(null: String))
+    val graph = Gen.choose(0, 18).flatMap(Gen.listOfN(_,
+      Gen.zip(node, label, dst)))
+    val leaf: Gen[EdgePred] = Gen.oneOf(Gen.const(AnyEdge),
+      Gen.oneOf("x", "y", "z", "w").map(LabelEdge))
+    val pred = Gen.frequency(2 -> leaf, 1 -> Gen.zip(leaf, leaf).map {
+      case (a, b) => OrEdge(a, b): EdgePred })
+    val roots = Gen.choose(1, 2).flatMap(Gen.listOfN(_,
+      Gen.frequency(5 -> node, 1 -> Gen.const("gone/1"))))
+    val windows = for (to <- 0 to 3; from <- 0 to to) yield (from, to)
+
+    val seen = scala.collection.mutable.Set.empty[String]
+    (0 until 20).foreach { i =>
+      val params = Gen.Parameters.default
+      val es = graph.pureApply(params, Seed(i))
+      val p = pred.pureApply(params, Seed(100 + i))
+      val rs = roots.pureApply(params, Seed(200 + i)).distinct
+      if (es.exists { case (s, _, d) => s == d }) seen += "self-loop"
+      if (es.distinct.size < es.size) seen += "duplicate"
+      if (es.exists(_._3 == null)) seen += "null dst"
+      if (p.isInstanceOf[OrEdge]) seen += "or"
+      val edges = es.toDF("src_id", "label", "dst_id")
+        .where(StepCompiler.edgeCol(p))
+      val adjacency = Adjacency(es.iterator)
+      def point(adj: Option[Adjacency], from: Int, to: Int) =
+        Traversal.followEdges(spark, edges, Left(rs), from, to, () => adj,
+          StepCompiler.edgeTest(p)).left.getOrElse(fail("not the point arm"))
+          .toSet
+      windows.foreach { case (from, to) =>
+        val viaAdjacency = point(Some(adjacency), from, to)
+        val ctx = s"graph $i ${es.mkString(" ")}, $p, roots $rs, [$from,$to]"
+        assert(viaAdjacency.map(_._1).size == viaAdjacency.size,
+          s"a node emitted twice: $ctx")
+        spark.conf.set(graft.graphx.Arms.LimitConf, "0")
+        val viaScan = try point(Some(adjacency), from, to)
+          finally spark.conf.unset(graft.graphx.Arms.LimitConf)
+        assert(viaScan == viaAdjacency, s"scan arm differs: $ctx")
+        // the distributed loop is the slow arm: the widest window and
+        // one more per graph, each window on two of the 20 graphs
+        if (windows(i % windows.size) == (from, to) || (from, to) == (0, 3)) {
+          val walk = point(Some(adjacency), 0, to).toMap
+          if (es.exists { case (s, l, d) => d == null &&
+              StepCompiler.edgeTest(p)(l) && walk.get(s).exists(_ < to) })
+            seen += "null dst reached"
+          val viaDistributed = Traversal.followDistributed(spark, edges,
+              rs.map(_ -> 0).toDF("id", "hop"), from, to)
+            .collect().map(r => (r.getString(0), r.getInt(1))).toSet
+          assert(viaDistributed == viaAdjacency,
+            s"distributed arm differs: $ctx")
+        }
+      }
+      if (viaCycle(es)) seen += "cycle"
+    }
+    val kinds = Set("self-loop", "duplicate", "null dst", "null dst reached",
+      "or", "cycle")
+    assert(seen == kinds, s"the graphs never held: ${kinds -- seen}")
+  }
+
+  /** Whether `es` holds a cycle through two or more nodes. */
+  private def viaCycle(es: Seq[(String, String, String)]): Boolean = {
+    val out = es.filter(e => e._3 != null && e._1 != e._3)
+      .groupMap(_._1)(_._3)
+    def reaches(from: String, to: String, seen: Set[String]): Boolean =
+      out.getOrElse(from, Nil).exists(n =>
+        n == to || !seen(n) && reaches(n, to, seen + n))
+    out.keys.exists(n => reaches(n, n, Set(n)))
+  }
 }

@@ -606,6 +606,17 @@ class GraphXSpec extends SparkSpec {
     assert(got.values.forall(_ == 2L), got.toString)
   }
 
+  test("triangleList packs keys only while ids and every degree fit 31 bits") {
+    val top = (1L << 31) - 1
+    assert(GraphAnalytics.packable(top, 0L, top))
+    assert(GraphAnalytics.packable(0L, 0L, 0L)) // the empty pair list
+    assert(!GraphAnalytics.packable(top + 1, 0L, 10L), "id past 2^31")
+    assert(!GraphAnalytics.packable(10L, -1L, 10L), "negative id")
+    // ids fit, but repeated edges could lift one degree past 2^31: the
+    // row count bounds every degree, so it must fit as well
+    assert(!GraphAnalytics.packable(10L, 0L, top + 1), "rows past 2^31")
+  }
+
   test("trussPeel: 0-support survivors of the cutoff round are kept") {
     import spark.implicits._
     // one triangle, k=3 (support >= 1): nothing ever peels, and with

@@ -10,12 +10,21 @@ every-8th compaction puts.
 
     python3 tools/oltp_classes.py /path/to/parent . --seeds 105 106 107
 
+With `--summary` it prints, instead, each checkout's end-to-end metrics
+over the seeds, read from `<root>/.bench_work/results/<workload>-seed<n>-
+trace<t>.json`: per metric the median and quartiles of each side, and in
+how many seeds the last root beat the first (one pair per seed):
+
+    python3 tools/oltp_classes.py /path/to/parent . --seeds 301 302 303 --summary
+
 The log holds every op the clients ran, timed-out ones included, so the
 means can differ slightly from the run's own metrics when an op failed.
 """
 import argparse
+import json
 import os
 import re
+import statistics
 import sys
 
 # each op class's share of the mix, and the engine's compaction cadence
@@ -23,6 +32,9 @@ import sys
 MIX = {"get": 0.50, "follow": 0.15, "scan": 0.05, "put": 0.30}
 WARM_PUTS = 7
 COMPACT_EVERY = 8
+
+# which way each end-to-end metric improves (BENCHMARK.json end_to_end)
+BETTER = {"setup_s": "lower", "mean_ms": "lower", "throughput_per_s": "higher"}
 
 LINE = re.compile(r"^graftbench \+[\d.]+s (.*) (\d+) ms(?:, \d+ rows)?$")
 
@@ -88,13 +100,72 @@ def puts(label, ops):
     print(f"  {label}: " + (" ".join(cells) if cells else "(none)"))
 
 
+def quartiles(xs):
+    """(q1, median, q3) of xs; a single run is its own quartiles."""
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def summary(roots, seeds, workload, trace):
+    """Per metric, each root's median and quartiles over the seeds, and
+    the pairs (same seed) the last root won against the first."""
+    runs = {}
+    for root in roots:
+        for seed in seeds:
+            path = os.path.join(root, ".bench_work", "results",
+                                f"{workload}-seed{seed}-trace{trace}.json")
+            if not os.path.exists(path):
+                print(f"missing: {path}", file=sys.stderr)
+                continue
+            with open(path) as f:
+                runs[root, seed] = json.load(f)
+    print(f"== {workload}, trace {trace}, seeds {' '.join(map(str, seeds))}")
+    for root in roots:
+        rs = [runs[root, s] for s in seeds if (root, s) in runs]
+        print(f"{os.path.abspath(root)}: {len(rs)} runs, "
+              f"{sum(r['correct'] for r in rs)} correct, "
+              f"{sum(r['failed'] for r in rs)} failed ops")
+    print(f"{'metric':<18}{'root':>30}{'n':>4}{'median':>11}{'q1':>11}"
+          f"{'q3':>11}{'iqr':>10}")
+    for metric, better in BETTER.items():
+        quarts = {}
+        for root in roots:
+            xs = [runs[root, s]["e2e"][metric]["value"] for s in seeds
+                  if (root, s) in runs and metric in runs[root, s]["e2e"]]
+            if not xs:
+                continue
+            q1, med, q3 = quarts[root] = quartiles(xs)
+            print(f"{metric:<18}{os.path.abspath(root)[-28:]:>30}{len(xs):>4}"
+                  f"{med:>11.2f}{q1:>11.2f}{q3:>11.2f}{q3 - q1:>10.2f}")
+        first, last = roots[0], roots[-1]
+        if len(roots) > 1 and first in quarts and last in quarts:
+            pairs = [(runs[first, s]["e2e"][metric]["value"],
+                      runs[last, s]["e2e"][metric]["value"]) for s in seeds
+                     if (first, s) in runs and (last, s) in runs]
+            won = sum((b < a) if better == "lower" else (b > a) for a, b in pairs)
+            (f1, fm, f3), lm = quarts[first], quarts[last][1]
+            print(f"{'':<18}last root wins {won} of {len(pairs)} pairs "
+                  f"({better} is better); median {lm - fm:+.2f} against the "
+                  f"first root's IQR {f3 - f1:.2f}")
+
+
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("roots", nargs="+",
                     help="checkouts whose .bench_work/logs to read")
     ap.add_argument("--seeds", nargs="+", type=int, required=True)
     ap.add_argument("--trace", type=int, default=0)
+    ap.add_argument("--summary", action="store_true",
+                    help="end-to-end medians, quartiles and pairs won "
+                         "instead of the per-class table")
+    ap.add_argument("--workload", default="oltp_mixed",
+                    help="workload whose results --summary reads")
     a = ap.parse_args(argv)
+    if a.summary:
+        summary(a.roots, a.seeds, a.workload, a.trace)
+        return
     for seed in a.seeds:
         runs = []
         for root in a.roots:
